@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -13,30 +14,34 @@ object Bench {
     // same fully-extended session as Verify — timed numbers always
     // reflect the extension stack, not registration order
     graft.plans.GraftExtensions.register(spark)
-    graft.plans.TopK.install(spark)
-    // untimed warmup at the smallest SF: JIT + codegen + classloading
-    // otherwise land on whichever queries run first
-    try {
-      val warm = "/root/testdata/sf0.001"
-      if (new java.io.File(warm).isDirectory) {
-        // batch + streaming machinery JIT/codegen warmup at the SMALLEST
-        // SF (s2/s5 compile the state-store and file-sink paths)
-        Seq("q1_agg", "q17_multi_join_chain", "e1_time_bucket", "d2_dedup_minhash_lsh",
-            "v1_knn_brute", "s2_stream_window_agg", "s5_stream_stream_join")
-          .foreach(n => SparkEntry.queries.get(n).foreach(fn => fn(spark, warm).count()))
-      }
-      // stage the streaming JSON inputs at the BENCH SF untimed (cached
-      // per JVM) so the timed streaming numbers measure the pipelines,
-      // not whichever query stages the shared input first
-      graft.operators.StreamingBatch.prestage(spark, sfDir)
-      // likewise the maintenance stores (merge-store, landed partitions,
-      // bloom index, MV partials): the timed entries measure the lookup/
-      // read operators, not the one-time store builds
-      graft.operators.Maintenance.prestage(spark, sfDir)
-      // PNG media fixtures for m7/m8: the timed entries measure the
-      // ImageIO decode + downstream, not the one-time encode
-      graft.operators.Multimodal.prestage(spark, sfDir)
-    } catch { case _: Throwable => () }
+    // untimed warmup at the smallest SF (the sf0.001 directory next to
+    // the bench SF): JIT + codegen + classloading otherwise land on
+    // whichever queries run first
+    val warm = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001").toString
+    if (new java.io.File(warm).isDirectory) {
+      // batch + streaming machinery JIT/codegen warmup at the SMALLEST
+      // SF (s2/s5 compile the state-store and file-sink paths); a warmup
+      // failure is reported here and recorded by the query's timed run
+      Seq("q1_agg", "q17_multi_join_chain", "e1_time_bucket", "d2_dedup_minhash_lsh",
+          "v1_knn_brute", "s2_stream_window_agg", "s5_stream_stream_join")
+        .foreach(n => SparkEntry.queries.get(n).foreach { fn =>
+          try fn(spark, warm).count()
+          catch { case NonFatal(e) => System.err.println(s"[bench] warmup $n failed: $e") }
+        })
+    }
+    // stage the streaming JSON inputs at the BENCH SF untimed (cached
+    // per JVM) so the timed streaming numbers measure the pipelines,
+    // not whichever query stages the shared input first. A failed
+    // prestage aborts the run: every query reading that store would
+    // otherwise time its build.
+    graft.operators.StreamingBatch.prestage(spark, sfDir)
+    // likewise the maintenance stores (merge-store, landed partitions,
+    // bloom index, MV partials): the timed entries measure the lookup/
+    // read operators, not the one-time store builds
+    graft.operators.Maintenance.prestage(spark, sfDir)
+    // PNG media fixtures for m7/m8: the timed entries measure the
+    // ImageIO decode + downstream, not the one-time encode
+    graft.operators.Multimodal.prestage(spark, sfDir)
     // optional comma-separated subset for focused iteration:
     //   SPARK_GRAFT_ONLY=d2_dedup_minhash_lsh,d6_dedup_clusters
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -75,13 +80,21 @@ object Bench {
     // s8 at 15.6 s vs 3.4 s focused — SCALING.md's round-9 mode). The
     // repeat plus the between-queries hygiene below is the fix.
     val streamCohort = selected.keySet.filter(_.startsWith("s"))
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    // A query that throws is a FAILURE: it gets no time, stays out of
+    // the totals, and is listed under "failed" in both JSON records.
+    val outcomes = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val reps = if (ioCohort(name) || streamCohort(name)) repeat + 1 else repeat
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
+      val times =
+        try Some((1 to reps).map { _ =>
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).count()
+          (System.nanoTime() - t0) / 1e9
+        })
+        catch {
+          case NonFatal(e) =>
+            System.err.println(s"[bench] $name failed: $e")
+            None
+        }
       // Between-queries hygiene (round 15, untimed): (a) drop the per-run
       // streaming dirs this query just wrote — hundreds of dirty
       // checkpoint/state dirs otherwise accumulate across the 348-query
@@ -92,12 +105,13 @@ object Bench {
       TempDirs.sweepMatching("_run_")
       if (streamCohort(name)) {
         try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
         spark.streams.resetTerminated()
       }
-      (name, times.min, times.head)
+      (name, times)
     }
-    val resultMap = results.map { case (n, steady, _) => n -> steady }.toMap
+    val results = outcomes.collect { case (n, Some(ts)) => (n, ts.min, ts.head) }
+    val failed = outcomes.collect { case (n, None) => "\"" + n + "\"" }.mkString("[", ",", "]")
     def fmt(v: Double): String = f"$v%.3f"
     val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
@@ -109,7 +123,7 @@ object Bench {
     // ~2000 chars, far too small for 236 name:time pairs, so the file is
     // the mechanical-triage record.
     val fullLine =
-      s"""{"metric":"total_full","value":${fmt(total)},"unit":"sec","cold_value":${fmt(coldTotal)},"repeat":$repeat,"n_queries":${results.size},"queries":$qs,"sf":$sfNum}"""
+      s"""{"metric":"total_full","value":${fmt(total)},"unit":"sec","cold_value":${fmt(coldTotal)},"repeat":$repeat,"n_queries":${results.size},"failed":$failed,"queries":$qs,"sf":$sfNum}"""
     println(fullLine)
     // Resolve the file against an explicit root (SPARK_GRAFT_REPO, else
     // CWD) and REPORT a failed write — a swallowed failure here left the
@@ -118,7 +132,7 @@ object Bench {
       .get(sys.env.getOrElse("SPARK_GRAFT_REPO", "."), "BENCH_FULL.json")
     try java.nio.file.Files.writeString(fullPath, fullLine + "\n")
     catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"WARN: failed to write $fullPath: ${e.getClass.getName}: ${e.getMessage}")
     }
     // ...then ONE compact line LAST, sized to survive the driver's
@@ -149,7 +163,7 @@ object Bench {
       val body = qs.map { case (n, v, _) => s"\"" + n + "\":" + fmt(v) }.mkString("{", ",", "}")
       println(s"""{"metric":"queries_part","part":${i + 1},"of":${chunks.size},"queries":$body,"sf":$sfNum}""")
     }
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cold_value":${fmt(coldTotal)},"repeat":$repeat,"n_queries":${results.size},"full":"BENCH_FULL.json","slowest":$slow,"sf":$sfNum}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cold_value":${fmt(coldTotal)},"repeat":$repeat,"n_queries":${results.size},"failed":$failed,"full":"BENCH_FULL.json","slowest":$slow,"sf":$sfNum}""")
     spark.stop()
   }
 }

@@ -36,8 +36,8 @@ object GraftSession {
     // stay broadcastable; explicit broadcast() hints are used regardless.
     .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
 
-  /** Local session for tests / ad-hoc mains, with the graft SQL functions
-    * and planner strategy installed.
+  /** Local session for tests / ad-hoc mains, with the graft extension
+    * stack installed by [[graft.plans.GraftExtensions.register]].
     */
   def local(cores: Int = Runtime.getRuntime.availableProcessors().min(32)): SparkSession = {
     val s = configure(
@@ -50,7 +50,6 @@ object GraftSession {
     ).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.plans.GraftExtensions.register(s)
-    graft.plans.TopK.install(s)
     s
   }
 }

@@ -163,8 +163,8 @@ object PlanAudit {
       "p10_curate_video"            -> "video curation: m13b scene profile -> integer gates -> bucket-keyed shard windows (m6's packing algebra)",
       "q63_supplier_allocation"     -> "largest-remainder allocation: order-keyed windows (basket-bounded) -> exact integer floors/remainders -> supplier-grain report",
       "t45_filter_agreement"        -> "filter agreement: two score scans joined on doc_id, 1-row broadcast stats, single confusion aggregate",
-      "m22_motion_profile"          -> "motion profile: lag windows over the ONCE-decoded shared frame table (decode-once media discipline)",
-      "d24_cluster_purity"          -> "cluster purity: cached cluster map joined to metadata, two cluster-keyed aggregates — no pair space added",
+      "m22_motion_profile"          -> "motion profile: lag windows over the checkpointed decoded frame table",
+      "d24_cluster_purity"          -> "cluster purity: checkpointed cluster map joined to metadata, two cluster-keyed aggregates — no pair space added",
       "t46_stage_attrition"         -> "stage attrition: one corpus scan computes all stage flags, single conditional-agg row stacked to the 4-stage report",
       "q65_cum_revenue"             -> "global decimal running revenue: GlobalPrefixSumExec (range exchange + BigDecimal partial stitch) — NO 1-task window",
       "q66_quantity_rank"           -> "global tie-heavy rank: GlobalRankExec tie-aware boundary stitch (50 distinct quantities, peer groups span partitions)",
@@ -172,7 +172,7 @@ object PlanAudit {
       "t47_word_burstiness"         -> "word burstiness: two keyed count aggregates, exact long moments, TakeOrdered(20) — no global sort",
       "d25_source_dup_rate"         -> "source dup rate: fingerprint-grain keeper aggregate + one equi-join back + source-grain report; no pair space",
       "v27_pair_distance_hist"      -> "pair-distance histogram: capped 100-vector sample, broadcast self-join (bounded build), decimal bucket sums",
-      "m23_scene_stats"             -> "scene tempo: decode-once frame table -> m13b scenes -> one doc-keyed aggregate",
+      "m23_scene_stats"             -> "scene tempo: checkpointed frame table -> m13b scenes -> one doc-keyed aggregate",
       "s39_stream_last_touch"       -> "last-touch read-out: bucketed user state scan + broadcast frontier + model-sized type report",
       "q67_spend_percentile"        -> "global spend percentile: PercentRankTies exec (range exchange + tie metadata + n off the offsets) — no 1-task window",
       "d26_cross_source_dups"       -> "cross-source dup matrix: fingerprint-equi self-join (pair space = dup groups only) -> unordered-pair aggregate",

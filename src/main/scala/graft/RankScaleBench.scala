@@ -69,7 +69,7 @@ object RankScaleBench {
     )
     def time(label: String, installRules: Boolean): Unit = {
       val sess = spark.newSession() // fresh experimental.* — rules OFF by default
-      if (installRules) graft.plans.GlobalRank.install(sess)
+      if (installRules) graft.plans.GraftExtensions.register(sess)
       queries.filter(q => only.forall(_.contains(q._1))).foreach { case (qn, sql) =>
         val t0 = System.nanoTime()
         val c = sess.sql(sql).collect().head.getLong(0)

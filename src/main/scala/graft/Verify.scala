@@ -67,7 +67,6 @@ object Verify {
     // depended on Map iteration order — now every query verifies under
     // the same fully-extended session the engine ships with
     graft.plans.GraftExtensions.register(spark)
-    graft.plans.TopK.install(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

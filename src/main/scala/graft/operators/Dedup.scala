@@ -82,9 +82,8 @@ object Dedup {
     val nBands = nHashes / rowsPerBand
 
     // the shingle scan feeds this plan three times (banding + two
-    // candidate verify joins) and the whole d6/d7 chain downstream —
-    // checkpoint it once per (session, dir) like the other chain stages
-    val sh = cached(s, d, "shingles")(shingled(s, d))
+    // candidate verify joins) — checkpoint it once
+    val sh = shingled(s, d).localCheckpoint()
     val banded = sh
       .select(col("doc_id"), GraftExpressions.minhashFromHashes(col("sh"), nHashes).as("sig"))
       .select(
@@ -219,42 +218,19 @@ object Dedup {
     * sets into keep/drop decisions; Pregel-style CC converges in
     * O(diameter) supersteps on the cluster). canonical_id is the minimum
     * doc_id of the component, i.e. the document a dedup pass keeps.
+    * The verified pair set and the cluster map are localCheckpoint'ed —
+    * materialized once, lineage truncated — so Pregel's iterative
+    * evaluation doesn't re-run the LSH chain per superstep and the
+    * consumers of the map don't re-run clustering. At 100 TB these
+    * intermediates are exactly what a production pipeline persists
+    * between stages.
     */
-  /** The dedup chain (d2 pairs → d6 clusters → d7 apply) shares its
-    * expensive intermediates per (session, corpus): the verified pair set
-    * and the cluster map are localCheckpoint'ed — materialized once,
-    * lineage truncated — so Pregel's iterative evaluation doesn't re-run
-    * the LSH chain per superstep and the apply step doesn't re-run
-    * clustering (round-1 VERDICT item 9). At 100 TB these intermediates
-    * are exactly what a production pipeline persists between stages.
-    */
-  // per-session caches held in a WeakHashMap so each session's entries
-  // (and their localCheckpoint blocks) become collectable when the
-  // session itself is unreachable — reference identity, so two live
-  // sessions can never share a cache (identityHashCode keys could collide)
-  private val chainCache =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-  private def cached(s: SparkSession, d: String, stage: String)(build: => DataFrame): DataFrame = {
-    val perSession = chainCache.synchronized {
-      // the cached DataFrames reference their session, which would keep the
-      // weak keys reachable — purge stopped sessions explicitly on access
-      chainCache.entrySet().removeIf(e => e.getKey.sparkContext.isStopped)
-      chainCache.computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-    }
-    perSession.computeIfAbsent(s"$d#$stage", _ => build.localCheckpoint())
-  }
-
   private def clusterMap(s: SparkSession, d: String): DataFrame = {
-    // NOTE: pairs is resolved BEFORE the clusters builder runs — a nested
-    // computeIfAbsent on the same map is a documented ConcurrentHashMap
-    // hazard ("Recursive update" whenever the keys share a bin)
-    val pairs = cached(s, d, "pairs")(d2MinhashLsh(s, d).select("id_a", "id_b"))
-    cached(s, d, "clusters") {
-      import org.apache.spark.graphx.{Edge, Graph}
-      val edges = pairs.rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-      val cc = Graph.fromEdges(edges, ()).connectedComponents().vertices
-      s.createDataFrame(cc).toDF("doc_id", "canonical_id")
-    }
+    import org.apache.spark.graphx.{Edge, Graph}
+    val pairs = d2MinhashLsh(s, d).select("id_a", "id_b").localCheckpoint()
+    val edges = pairs.rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
+    val cc = Graph.fromEdges(edges, ()).connectedComponents().vertices
+    s.createDataFrame(cc).toDF("doc_id", "canonical_id").localCheckpoint()
   }
 
   def d6DedupClusters(s: SparkSession, d: String): DataFrame =
@@ -440,9 +416,9 @@ object Dedup {
     * a different edge set: GraphX CC, O(diameter) supersteps, canonical
     * = min member id), reported as a per-cluster size summary. This is
     * the "family of retyped variants" view record-linkage produces once
-    * pairwise matches chain. The pair set is the chainCache'd d14
-    * output — running d14 then d15 (as bench + verify do) computes the
-    * candidate join and Levenshtein verify exactly once.
+    * pairwise matches chain. The pair set is d14's checkpointed
+    * output, so GraphX's supersteps don't re-run the candidate join and
+    * Levenshtein verify.
     */
   def d15FuzzyClusters(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.graphx.{Edge, Graph}
@@ -533,36 +509,36 @@ object Dedup {
       .orderBy("doc_id", "span_start")
   }
 
-  /** The chainCache'd pair set itself (no output sort) — d15 consumes
+  /** The checkpointed pair set itself (no output sort) — d15 consumes
     * this directly so its GraphX edge scan doesn't pay d14's ORDER BY.
     */
-  private def fuzzyPairsUnsorted(s: SparkSession, d: String, maxDist: Int = 40, window: Int = 10): DataFrame =
-    cached(s, d, s"fuzzy_pairs_$maxDist-$window") {
-      import org.apache.spark.sql.expressions.Window
-      val ranked = Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), col("source"), substring(col("text"), 1, 60).as("head"))
-        .withColumn(
-          "rn",
-          row_number().over(Window.partitionBy("lang", "source").orderBy("head", "doc_id"))
-        )
-      val a = ranked.select(
-        col("lang"), col("source"), col("doc_id").as("ia"), col("head").as("head_a"),
-        explode(sequence(col("rn") + 1, col("rn") + window)).as("rn_b")
+  private def fuzzyPairsUnsorted(s: SparkSession, d: String, maxDist: Int = 40, window: Int = 10): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val ranked = Tables.documents(s, d)
+      .select(col("doc_id"), col("lang"), col("source"), substring(col("text"), 1, 60).as("head"))
+      .withColumn(
+        "rn",
+        row_number().over(Window.partitionBy("lang", "source").orderBy("head", "doc_id"))
       )
-      val b = ranked.select(
-        col("lang"), col("source"), col("doc_id").as("ib"), col("head").as("head_b"),
-        col("rn").as("rn_b")
+    val a = ranked.select(
+      col("lang"), col("source"), col("doc_id").as("ia"), col("head").as("head_a"),
+      explode(sequence(col("rn") + 1, col("rn") + window)).as("rn_b")
+    )
+    val b = ranked.select(
+      col("lang"), col("source"), col("doc_id").as("ib"), col("head").as("head_b"),
+      col("rn").as("rn_b")
+    )
+    a.join(b, Seq("lang", "source", "rn_b"))
+      .withColumn("dist", levenshtein(col("head_a"), col("head_b")).cast("long"))
+      .filter(col("dist") <= maxDist)
+      // sort order is by head, not id — normalize each (unique) rank pair
+      .select(
+        least(col("ia"), col("ib")).as("id_a"),
+        greatest(col("ia"), col("ib")).as("id_b"),
+        col("dist")
       )
-      a.join(b, Seq("lang", "source", "rn_b"))
-        .withColumn("dist", levenshtein(col("head_a"), col("head_b")).cast("long"))
-        .filter(col("dist") <= maxDist)
-        // sort order is by head, not id — normalize each (unique) rank pair
-        .select(
-          least(col("ia"), col("ib")).as("id_a"),
-          greatest(col("ia"), col("ib")).as("id_b"),
-          col("dist")
-        )
-    }
+      .localCheckpoint()
+  }
 
   /** d17: SEMANTIC dedup (the SemDeDup recipe, Abbas et al. 2023):
     * cluster the embedding space, compute pairwise cosine ONLY within
@@ -723,10 +699,11 @@ object Dedup {
     * extra shuffles beyond it.
     */
   def d20SoftDedup(s: SparkSession, d: String): DataFrame = {
-    val sizes = clusterMap(s, d)
+    val clusters = clusterMap(s, d)
+    val sizes = clusters
       .groupBy("canonical_id")
       .agg(count(lit(1)).as("cs"))
-    val weights = clusterMap(s, d).join(sizes, "canonical_id").select(col("doc_id"), col("cs"))
+    val weights = clusters.join(sizes, "canonical_id").select(col("doc_id"), col("cs"))
     Tables.documents(s, d)
       .join(broadcast(weights), Seq("doc_id"), "left")
       .select(
@@ -886,7 +863,7 @@ object Dedup {
     * the audit that decides whether to shard the dedup by language at
     * 100 TB (sharding cuts the pair space by ~langs² but forfeits
     * cross-lang dups; this table is the evidence either way). Rides the
-    * cached cluster map; two keyed aggregates over cluster-sized data.
+    * checkpointed cluster map; two keyed aggregates over cluster-sized data.
     */
   def d24ClusterPurity(s: SparkSession, d: String): DataFrame = {
     val j = clusterMap(s, d)
@@ -1122,7 +1099,7 @@ object Dedup {
     * output contract identical to d6 (min-id canonical per component).
     */
   def d28CcBigstar(s: SparkSession, d: String): DataFrame = {
-    val pairs = cached(s, d, "pairs")(d2MinhashLsh(s, d).select("id_a", "id_b"))
+    val pairs = d2MinhashLsh(s, d).select("id_a", "id_b").localCheckpoint()
     bigStarComponents(pairs).orderBy("doc_id")
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import scala.util.control.NonFatal
 
 /** §2.7 multimodal column plumbing.
   *
@@ -243,12 +244,15 @@ object Multimodal {
           e
         )
     } finally {
-      // r19 (ADVICE): close the stream even if setInput(null) itself
-      // throws, and drop a wedged per-thread reader so one poison input
-      // cannot break every later row on this pool thread.
+      // close the stream even if setInput(null) itself throws, and
+      // dispose + drop a wedged per-thread reader so one poison input
+      // cannot break every later row on this pool thread
       try reader.setInput(null)
-      catch { case _: Throwable => pngReaderTL.remove() }
-      finally iis.close()
+      catch {
+        case NonFatal(_) =>
+          try reader.dispose()
+          finally pngReaderTL.remove()
+      } finally iis.close()
     }
   }
 
@@ -972,39 +976,28 @@ object Multimodal {
     * where a production decoder (ffmpeg behind the same iterator) would
     * slot in at 100 TB.
     */
-  // the decoded (doc_id, frame, luma) table, built ONCE per (JVM, dir):
-  // four queries consume the same frames (m13b scenes, m22 motion, p10
-  // curation, plus ad-hoc callers) and a production pipeline decodes a
-  // video corpus exactly once — the ANN-artifact cache discipline
-  // applied to media (localCheckpoint pins the decoded table to
-  // executor storage; the decode itself is still the real JDK reader
-  // and still hash-gated through every consumer). Keyed by (session, dir):
-  // a checkpoint survives only its own session's executors, so a cached
-  // plan from a stopped session must never be served to a new one.
-  private val frameCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private[graft] def frameTable(s: SparkSession, d: String): DataFrame =
-    frameCache.computeIfAbsent(
-      (s, d),
-      _ => {
-        import s.implicits._
-        s.read
-          .parquet(s"${mediaStore(s, d)}/media")
-          .select(col("doc_id"), col("gif_meta"))
-          .as[(Long, Array[Byte])]
-          .mapPartitions { it =>
-            val reader = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-            it.flatMap { case (id, bytes) =>
-              decodeGifFramesWith(reader, id, bytes).iterator.zipWithIndex.map {
-                case (v, i) => (id, i, v)
-              }
-            }
+  // the decoded (doc_id, frame, luma) table — m13b scenes, m22 motion
+  // and p10 curation consume it; localCheckpoint pins it to executor
+  // storage so a consumer that reads it more than once doesn't re-run
+  // the decode (still the real JDK reader, hash-gated through every
+  // consumer)
+  private[graft] def frameTable(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    s.read
+      .parquet(s"${mediaStore(s, d)}/media")
+      .select(col("doc_id"), col("gif_meta"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions { it =>
+        val reader = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
+        it.flatMap { case (id, bytes) =>
+          decodeGifFramesWith(reader, id, bytes).iterator.zipWithIndex.map {
+            case (v, i) => (id, i, v)
           }
-          .toDF("doc_id", "i", "v")
-          .localCheckpoint()
+        }
       }
-    )
+      .toDF("doc_id", "i", "v")
+      .localCheckpoint()
+  }
 
   def m13bSceneReal(s: SparkSession, d: String, tau: Int = 96): DataFrame =
     sceneIslands(frameTable(s, d), tau)

@@ -109,22 +109,10 @@ object Similarity {
     * [[graft.plans.TopK.topKPerKey]] operator — ≤ k rows per (vector,
     * partition) ride the ranking exchange instead of a full per-vector
     * sort. Exact (no ANN recall gap), so DuckDB's brute-force top-k is
-    * the oracle.
+    * the oracle. The edge table is localCheckpoint'ed, so consumers that
+    * read it several times (v16's and v23's self-joins) don't re-run the
+    * block join.
     */
-  // per-session localCheckpoint cache for the kNN edge table (Dedup's
-  // chainCache discipline): v5 and v23 share the expensive block-join
-  // edge build; WeakHashMap keys + explicit stopped-session purge keep
-  // the checkpoint blocks collectable
-  private val edgeCache =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-  private def cachedEdges(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val perSession = edgeCache.synchronized {
-      edgeCache.entrySet().removeIf(e => e.getKey.sparkContext.isStopped)
-      edgeCache.computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-    }
-    perSession.computeIfAbsent(key, _ => build.localCheckpoint())
-  }
-
   def v5KnnGraph(s: SparkSession, d: String, k: Int = 3, nBlocks: Int = 8): DataFrame = {
     import graft.plans.GraftExpressions
     val e = Tables
@@ -154,11 +142,11 @@ object Similarity {
     val directed = pairs
       .select(col("id_a").as("q_id"), col("id_b").as("c_id"), col("cos"))
       .union(pairs.select(col("id_b").as("q_id"), col("id_a").as("c_id"), col("cos")))
-    cachedEdges(s, s"$d#v5#$k#$nBlocks") {
-      graft.plans.TopK
-        .topKPerKey(directed, Seq("q_id"), "cos", "c_id", k)
-        .select(col("q_id"), col("c_id"), round(col("cos"), 4).as("cos"))
-    }.orderBy(col("q_id"), desc("cos"), col("c_id"))
+    graft.plans.TopK
+      .topKPerKey(directed, Seq("q_id"), "cos", "c_id", k)
+      .select(col("q_id"), col("c_id"), round(col("cos"), 4).as("cos"))
+      .localCheckpoint()
+      .orderBy(col("q_id"), desc("cos"), col("c_id"))
   }
 
   /** Per-label centroid components: elementwise mean via posexplode +
@@ -270,49 +258,34 @@ object Similarity {
         .groupBy("vec_id")
         .agg(max_by(col("list_id"), struct(col("score"), col("list_id"))).as("list_id"))
 
-    // the trained centroid table is a pure function of (source dir,
-    // nLists, lloydIters) — model-sized, expensive to fit (per-iteration
-    // driver folds) — so train ONCE per JVM: v7's two gate
-    // configurations, v14, and bench repeats all reuse the artifact
-    // (the codebook-is-an-offline-artifact shape, same as v10's PQ)
-    val centroids: DataFrame = centroidDf(
-      ivfCentroidCache.computeIfAbsent(
-        s"$d#$nLists#$lloydIters",
-        _ => {
-          var cen = seedCentroids()
-          for (_ <- 1 to lloydIters) {
-            val updated = assign(cen)
-              .join(e, "vec_id")
-              .select(col("list_id"), posexplode(col("embedding")).as(Seq("idx", "v")))
-              .groupBy("list_id", "idx")
-              .agg(avg("v").as("c"))
-              .orderBy("list_id", "idx")
-              .collect()
-              .groupBy(_.getInt(0))
-              .toSeq
-              // rounded: the distributed avg's merge order is nondeterministic,
-              // so raw last-ulp jitter could flip a boundary assignment between
-              // otherwise-identical runs; 6 decimals is far above fp noise and
-              // far below any real cell boundary
-              .map { case (l, rows) =>
-                l -> rows.sortBy(_.getInt(1)).map(r => math.rint(r.getDouble(2) * 1e6) / 1e6).toSeq
-              }
-            // a cell can go empty mid-training; keep its previous centroid row
-            val updatedMap = updated.toMap
-            val prev = cen.collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq)
-            cen = centroidDf(prev.map { case (l, c) => l -> updatedMap.getOrElse(l, c) }.toSeq)
-          }
-          cen.collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq).toSeq
+    // deterministic Lloyd training of the model-sized centroid table
+    // (per-iteration driver folds — the codebook-is-an-offline-artifact
+    // shape, same as v10's PQ)
+    var centroids = seedCentroids()
+    for (_ <- 1 to lloydIters) {
+      val updated = assign(centroids)
+        .join(e, "vec_id")
+        .select(col("list_id"), posexplode(col("embedding")).as(Seq("idx", "v")))
+        .groupBy("list_id", "idx")
+        .agg(avg("v").as("c"))
+        .orderBy("list_id", "idx")
+        .collect()
+        .groupBy(_.getInt(0))
+        .toSeq
+        // rounded: the distributed avg's merge order is nondeterministic,
+        // so raw last-ulp jitter could flip a boundary assignment between
+        // otherwise-identical runs; 6 decimals is far above fp noise and
+        // far below any real cell boundary
+        .map { case (l, rows) =>
+          l -> rows.sortBy(_.getInt(1)).map(r => math.rint(r.getDouble(2) * 1e6) / 1e6).toSeq
         }
-      )
-    )
-
+      // a cell can go empty mid-training; keep its previous centroid row
+      val updatedMap = updated.toMap
+      val prev = centroids.collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq)
+      centroids = centroidDf(prev.map { case (l, c) => l -> updatedMap.getOrElse(l, c) }.toSeq)
+    }
     (e, assign(centroids), centroids) // cells = (vec_id, list_id): the inverted file
   }
-
-  // trained IVF centroids per (source dir, nLists, lloydIters)
-  private val ivfCentroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Seq[Double])]]()
 
   def v7KnnIvf(
       s: SparkSession,
@@ -548,11 +521,6 @@ object Similarity {
     * each), not the ADC scan — at 100 TB the codebook is trained once
     * on a sample and the scan term is the only one that grows.
     */
-  // fitted PQ codebooks per (source dir, m, codes, lloydIters) — see
-  // the training block inside v10KnnPq
-  private val v10CodebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Int, Seq[Double])]]()
-
   def v10KnnPq(
       s: SparkSession,
       d: String,
@@ -604,57 +572,47 @@ object Similarity {
         .groupBy("vec_id", "sub")
         .agg(min_by(col("code"), struct(col("d2"), col("code"))).as("code"))
 
-    // the trained codebook is a pure function of (source dir, m, codes,
-    // lloydIters) — model-sized (m·codes·subDim doubles) and expensive
-    // to fit (seed collect + per-iteration driver folds), so it is
-    // trained ONCE per JVM and the two gate configurations (v10 / the
-    // exact shortlist=∞ twin) plus bench repeats reuse it. Production
-    // shape: the codebook is an artifact you fit offline and ship.
-    val codebook: DataFrame = centroidDf(
-      v10CodebookCache.computeIfAbsent(
-        s"$d#$m#$codes#$lloydIters",
-        _ => {
-          // deterministic seeds: the `codes` hash-ordered vectors seed every
-          // subspace (their sub-slices differ per subspace, so codebooks do too)
-          val seedIds = e
-            .select(col("vec_id"))
-            .withColumn("rk", xxhash64(col("vec_id")))
-            .orderBy("rk")
-            .limit(codes)
-            .collect()
-            .map(_.getLong(0))
-            .zipWithIndex
-            .toMap
-          var cb: DataFrame = centroidDf(
-            subs
-              .filter(col("vec_id").isin(seedIds.keys.toSeq: _*))
-              .collect()
-              .map(r => (seedIds(r.getLong(0)), r.getInt(1), r.getSeq[Double](2).toSeq))
-              .map { case (code, sub, sv) => (sub, code, sv) }
-              .toSeq
-          )
-          for (_ <- 1 to lloydIters) {
-            val updated = assign(cb)
-              .join(subs, Seq("vec_id", "sub"))
-              .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("idx", "v")))
-              .groupBy("sub", "code", "idx")
-              .agg(avg("v").as("c"))
-              .collect()
-              .groupBy(r => (r.getInt(0), r.getInt(1)))
-              .toSeq
-              .map { case ((sub, code), rows) =>
-                (sub, code, rows.sortBy(_.getInt(2)).map(r => math.rint(r.getDouble(3) * 1e6) / 1e6).toSeq)
-              }
-            val updatedMap = updated.map { case (sub, code, c) => (sub, code) -> c }.toMap
-            val prev = cb.collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toSeq)
-            cb = centroidDf(prev.map { case ((sub, code), c) =>
-              (sub, code, updatedMap.getOrElse((sub, code), c))
-            }.toSeq)
-          }
-          cb.collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq)).toSeq
-        }
-      )
+    // deterministic Lloyd training of the model-sized codebook
+    // (m·codes·subDim doubles; seed collect + per-iteration driver
+    // folds). Production shape: the codebook is an artifact you fit
+    // offline and ship. Deterministic seeds: the `codes` hash-ordered
+    // vectors seed every subspace (their sub-slices differ per subspace,
+    // so codebooks do too).
+    val seedIds = e
+      .select(col("vec_id"))
+      .withColumn("rk", xxhash64(col("vec_id")))
+      .orderBy("rk")
+      .limit(codes)
+      .collect()
+      .map(_.getLong(0))
+      .zipWithIndex
+      .toMap
+    var codebook: DataFrame = centroidDf(
+      subs
+        .filter(col("vec_id").isin(seedIds.keys.toSeq: _*))
+        .collect()
+        .map(r => (seedIds(r.getLong(0)), r.getInt(1), r.getSeq[Double](2).toSeq))
+        .map { case (code, sub, sv) => (sub, code, sv) }
+        .toSeq
     )
+    for (_ <- 1 to lloydIters) {
+      val updated = assign(codebook)
+        .join(subs, Seq("vec_id", "sub"))
+        .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("idx", "v")))
+        .groupBy("sub", "code", "idx")
+        .agg(avg("v").as("c"))
+        .collect()
+        .groupBy(r => (r.getInt(0), r.getInt(1)))
+        .toSeq
+        .map { case ((sub, code), rows) =>
+          (sub, code, rows.sortBy(_.getInt(2)).map(r => math.rint(r.getDouble(3) * 1e6) / 1e6).toSeq)
+        }
+      val updatedMap = updated.map { case (sub, code, c) => (sub, code) -> c }.toMap
+      val prev = codebook.collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toSeq)
+      codebook = centroidDf(prev.map { case ((sub, code), c) =>
+        (sub, code, updatedMap.getOrElse((sub, code), c))
+      }.toSeq)
+    }
 
     val codeTable = assign(codebook) // (vec_id, sub, code): M bytes per vector
     val q = subs.filter(col("vec_id") < nQueries)

@@ -160,14 +160,6 @@ case class AsofJoinExec(
 
 object AsofJoin {
 
-  /** Ensure the strategy is installed on the session (idempotent). */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(AsofJoinStrategy)) {
-      spark.experimental.extraStrategies = strategies :+ AsofJoinStrategy
-    }
-  }
-
   /** As-of join by column NAME (the analyzer resolves the unresolved
     * attributes against the two children — left and right column names
     * must not collide, same as any join you'd write by hand).
@@ -182,7 +174,7 @@ object AsofJoin {
       rightTie: String
   ): DataFrame = {
     val spark = left.sparkSession
-    install(spark)
+    GraftExtensions.register(spark)
     val plan = AsofJoinNode(
       UnresolvedAttribute.quoted(leftKey),
       UnresolvedAttribute.quoted(rightKey),

@@ -2239,20 +2239,3 @@ case class GlobalRangePrefixSumExec(
 
   override protected def withNewChildInternal(c: SparkPlan): SparkPlan = copy(child = c)
 }
-
-object GlobalRank {
-
-  /** Ensure rules + strategy are installed on the session (idempotent). */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Seq(GlobalWindowRewrite: Rule[LogicalPlan]).foreach { r =>
-      if (!spark.experimental.extraOptimizations.contains(r)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ r
-      }
-    }
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(GlobalRankStrategy)) {
-      spark.experimental.extraStrategies = strategies :+ GlobalRankStrategy
-    }
-  }
-}

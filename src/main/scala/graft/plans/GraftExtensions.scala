@@ -1,42 +1,22 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
-/** Registers the §2.8 custom expressions on the SQL surface, so
+/** The one installer for graft's extension stack on a session: the §2.8
+  * custom expressions on the SQL surface (so
   * `spark.sql("SELECT graft_dot(a, b) ...")` works exactly like the
-  * Column API (`GraftExpressions.dotF`). Install either via
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  * post-hoc with [[GraftExtensions.register]].
+  * Column API, `GraftExpressions.dotF`), the optimizer rules and the
+  * planner strategies. [[graft.GraftSession.local]] calls [[register]];
+  * any other session calls it once after creation. The builders that
+  * plan a custom node (`TopK.topKPerKey`, `AsofJoin.asof`,
+  * `RollingQuantile.withRollingQuantile`) call it too, so a bare session
+  * can use them directly.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions._
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    builders.foreach { case (name, builder) =>
-      e.injectFunction((FunctionIdentifier(name), info(name), builder))
-    }
-    // window-top-k → TopKPerKey rewrite + the strategy that plans it
-    e.injectOptimizerRule(_ => TopKRewrite)
-    e.injectPlannerStrategy(_ => TopKStrategy)
-    // unpartitioned rank/ntile/running-agg/offset windows → the
-    // distributed GlobalRank family (one unified rule since round 15)
-    e.injectOptimizerRule(_ => GlobalWindowRewrite)
-    e.injectPlannerStrategy(_ => GlobalRankStrategy)
-    // exact rolling quantile in O(log k)/row (e57's large-k scale path)
-    e.injectPlannerStrategy(_ => RollingQuantileStrategy)
-    // registered-rollup answering of raw-table aggregates
-    e.injectOptimizerRule(_ => MvRewrite)
-    // stored-stats broadcast pricing of registered-table joins
-    e.injectOptimizerRule(_ => StatsPlanner.StatsBroadcastRule)
-  }
-}
-
 object GraftExtensions {
-
-  private def info(name: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, name)
 
   private def litDouble(e: Expression): Double = {
     require(e.foldable, s"expected a literal, got $e")
@@ -75,26 +55,32 @@ object GraftExtensions {
     }
   }
 
-  /** Idempotent post-hoc registration on an existing session. */
+  /** Optimizer rules, in installation order: window-top-k → TopKPerKey,
+    * registered-rollup answering of raw-table aggregates, stored-stats
+    * broadcast pricing of registered-table joins, and the unpartitioned
+    * rank/ntile/running-agg/offset windows → the distributed GlobalRank
+    * family.
+    */
+  private val rules: Seq[Rule[LogicalPlan]] =
+    Seq(TopKRewrite, MvRewrite, StatsPlanner.StatsBroadcastRule, GlobalWindowRewrite)
+
+  /** Planner strategies for the custom logical nodes, in installation order. */
+  private val strategies: Seq[SparkStrategy] =
+    Seq(TopKStrategy, GlobalRankStrategy, AsofJoinStrategy, RollingQuantileStrategy)
+
+  /** Install the SQL functions and append whichever rules and strategies
+    * the session lacks — idempotent, so a second call changes nothing.
+    */
   def register(spark: SparkSession): Unit = {
     builders.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
-    if (!spark.experimental.extraOptimizations.contains(TopKRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKRewrite
-    }
-    if (!spark.experimental.extraOptimizations.contains(MvRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite
-    }
-    if (!spark.experimental.extraOptimizations.contains(StatsPlanner.StatsBroadcastRule)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ StatsPlanner.StatsBroadcastRule
-    }
-    TopK.install(spark)
-    GlobalRank.install(spark)
-    AsofJoin.install(spark)
+    val missingRules = rules.filterNot(spark.experimental.extraOptimizations.contains)
+    if (missingRules.nonEmpty)
+      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations ++ missingRules
+    val missingStrategies = strategies.filterNot(spark.experimental.extraStrategies.contains)
+    if (missingStrategies.nonEmpty)
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies ++ missingStrategies
   }
 }

@@ -221,14 +221,6 @@ case class RollingQuantileExec(
 
 object RollingQuantile {
 
-  /** Ensure the strategy is installed on the session (idempotent). */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(RollingQuantileStrategy)) {
-      spark.experimental.extraStrategies = strategies :+ RollingQuantileStrategy
-    }
-  }
-
   /** Append `<nWinName>` (BIGINT non-null window size) and `<outName>`
     * (BIGINT quantile, null on an all-null window) per row: the exact
     * ⌈q·n⌉-th smallest of the non-null values among the last `k` rows
@@ -247,7 +239,7 @@ object RollingQuantile {
       outName: String = "q_val"
   ): DataFrame = {
     val spark = df.sparkSession
-    install(spark)
+    GraftExtensions.register(spark)
     val plan = RollingQuantileNode(
       partCols.map(UnresolvedAttribute.quoted),
       orderCols.map(c => SortOrder(UnresolvedAttribute.quoted(c), Ascending)),

@@ -20,8 +20,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * side too, so only ≤ k rows per (key, input partition) ride the
   * exchange — the same two-phase contract as partial aggregation.
   *
-  * Full extension stack: logical node → strategy (registered via
-  * `spark.experimental.extraStrategies` or [[GraftExtensions]]) →
+  * Full extension stack: logical node → strategy (installed by
+  * [[GraftExtensions.register]]) →
   * physical exec with `requiredChildDistribution`, demonstrating plan
   * integration rather than an RDD detour: Catalyst still prunes/pushes
   * below it, and EnsureRequirements plans the single hash exchange.
@@ -165,13 +165,8 @@ case class TopKPerKeyExec(
 
 object TopK {
 
-  /** Ensure the strategy is installed on the session (idempotent). */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies = strategies :+ TopKStrategy
-    }
-  }
+  /** Forwarder to [[GraftExtensions.register]], kept for existing callers. */
+  def install(spark: org.apache.spark.sql.SparkSession): Unit = GraftExtensions.register(spark)
 
   /** Top k rows per key, ranked by `order` DESC NULLS LAST with `tie`
     * ASC NULLS FIRST breaking ties (a total order — required for
@@ -184,7 +179,7 @@ object TopK {
     */
   def topKPerKey(df: DataFrame, keyCols: Seq[String], order: String, tie: String, k: Int): DataFrame = {
     val spark = df.sparkSession
-    install(spark)
+    GraftExtensions.register(spark)
     val plan = TopKPerKeyNode(
       keyCols.map(UnresolvedAttribute.quoted),
       UnresolvedAttribute.quoted(order),

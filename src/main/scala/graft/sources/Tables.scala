@@ -83,15 +83,19 @@ object Tables {
     *    byte-range splits too, so a single-row-group file larger than
     *    target×maxPartitionBytes would plan ≥ target splits and silently
     *    skip the floor in exactly the 1-task case it exists for. When
-    *    the scan has fewer FILES than the target, the true parallelism
-    *    ceiling (Σ row groups, read from the ≤ target parquet footers —
-    *    bounded, local metadata) gates instead; many-file scans skip the
-    *    footer reads entirely.
+    *    a Parquet scan has fewer FILES than the target, the true
+    *    parallelism ceiling (Σ row groups, read from the ≤ target
+    *    footers — bounded, local metadata) gates instead; many-file
+    *    scans and non-Parquet formats use the planned split count.
     *  - Scan-bytes gate: the floor only fires when the whole scan is at
     *    most target×maxPartitionBytes — i.e. when the added exchange
     *    moves at most one scan-task's worth of bytes per core. A pruned
     *    100 TB scan that is merely narrower than the core count is left
-    *    alone rather than force-reshuffled.
+    *    alone rather than force-reshuffled. The file listing behind both
+    *    gates is `listFiles(Nil, Nil)`, which ignores partition filters:
+    *    the bytes are the whole table's, so a heavily partition-pruned
+    *    scan can skip a floor it would have earned (conservative, never
+    *    wrong results).
     *  - Optional hash KEYS: keyless `repartition(n)` pays a local
     *    sort of the FULL rows before the round-robin write
     *    (`spark.sql.execution.sortBeforeRepartition`, on by default so
@@ -103,6 +107,7 @@ object Tables {
   def parallelized(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     def bare(p: LogicalPlan): Boolean = p match {
@@ -130,7 +135,7 @@ object Tables {
     // row-group count when the file set is small enough to ask cheaply
     val planned = df.rdd.getNumPartitions
     val ceiling =
-      if (files.length >= target) planned
+      if (files.length >= target || !rel.fileFormat.isInstanceOf[ParquetFileFormat]) planned
       else {
         val conf = spark.sessionState.newHadoopConf()
         val rowGroups = files.map { f =>

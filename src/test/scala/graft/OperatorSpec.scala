@@ -94,6 +94,25 @@ class WideningSpec extends AnyFunSuite {
     assert(sh != 0L)
   }
 
+  test("register is the one idempotent installer: every rule, strategy and SQL function exactly once") {
+    import graft.plans._
+    val s = spark.newSession() // fresh experimental.* and function registry
+    GraftExtensions.register(s)
+    GraftExtensions.register(s)
+    val rules = Seq(TopKRewrite, MvRewrite, StatsPlanner.StatsBroadcastRule, GlobalWindowRewrite)
+    val strategies = Seq(TopKStrategy, GlobalRankStrategy, AsofJoinStrategy, RollingQuantileStrategy)
+    assert(rules == s.experimental.extraOptimizations)
+    assert(strategies == s.experimental.extraStrategies)
+    val fns = Seq(
+      "graft_dot", "graft_minhash", "graft_simhash64", "graft_shingle_hashes",
+      "graft_intersect_size", "graft_kll", "graft_kll_merge", "graft_kll_quantile",
+      "graft_theta", "graft_theta_estimate", "graft_theta_intersect", "graft_gramian"
+    )
+    fns.foreach(f => assert(s.catalog.functionExists(f), f))
+    val registered = s.sessionState.functionRegistry.listFunction().map(_.funcName)
+    assert(registered.filter(_.startsWith("graft_")).sorted == fns.sorted)
+  }
+
   test("dt-partitioned layout gives partition-pruned scans") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft_prune_").toString
@@ -213,6 +232,25 @@ class DedupSpec extends AnyFunSuite {
     assert(rows.nonEmpty)
     val byComp = rows.groupBy(_._2)
     assert(byComp.forall { case (canon, members) => members.map(_._1).min == canon })
+  }
+
+  test("d6 re-run after its documents table is overwritten answers from the new table") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft_d6_rewrite_").toString
+    val path = s"$dir/documents.parquet"
+    val d6 = SparkEntry.queries("d6_dedup_clusters")
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val docs = graft.sources.Tables.documents(spark, sf)
+    docs.write.parquet(path)
+    val first = pairs(d6(spark, dir))
+    assume(first.nonEmpty)
+    // the second table drops every member of the first run's first cluster
+    val gone = first.filter(_._2 == first.head._2).map(_._1)
+    docs.filter(!col("doc_id").isin(gone: _*)).write.mode("overwrite").parquet(path)
+    val ids = spark.read.parquet(path).select("doc_id").collect().map(_.getLong(0)).toSet
+    val second = pairs(d6(spark, dir))
+    assert(second.forall { case (id, _) => ids(id) }, s"stale doc_ids in ${second.filterNot(p => ids(p._1))}")
+    assert(second == pairs(d6(spark.newSession(), dir)))
   }
 
   test("c1 compaction reduces file count and preserves rows") {
