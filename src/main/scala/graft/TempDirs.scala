@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import scala.util.control.NonFatal
+import graft.sources.SnapshotStore
 
 /** Temp workspace directories for operator harnesses (stream sink runs,
   * store-maintenance scratch stores). Every dir created here is removed
@@ -13,16 +15,14 @@ import java.nio.file.{Files, Path}
 object TempDirs {
   private val created = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    created.forEach { root =>
-      try {
-        Files
-          .walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { try Files.deleteIfExists(p) catch { case _: Throwable => () } })
-      } catch { case _: Throwable => () }
-    }
-  }))
+  Runtime.getRuntime.addShutdownHook(new Thread(() => created.forEach(remove(_))))
+
+  /** Best-effort recursive delete: a dir that vanished or cannot be
+    * walked is left alone rather than failing the caller.
+    */
+  private def remove(root: Path): Unit =
+    try SnapshotStore.deleteTree(root)
+    catch { case NonFatal(_) => () }
 
   /** Create a fresh temp dir registered for exit-time recursive delete. */
   def create(prefix: String): String = {
@@ -47,12 +47,7 @@ object TempDirs {
     while (it.hasNext) {
       val root = it.next()
       if (root.getFileName.toString.contains(marker)) {
-        try {
-          Files
-            .walk(root)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { try Files.deleteIfExists(p) catch { case _: Throwable => () } })
-        } catch { case _: Throwable => () }
+        remove(root)
         it.remove()
         n += 1
       }

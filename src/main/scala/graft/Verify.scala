@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -76,10 +77,10 @@ object Verify {
           .parquet(s"$outDir/$name")
         clearErrorMarker(outDir, name)
       }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         try writeErrorMarker(spark, outDir, name, e)
-        catch { case e2: Throwable =>
+        catch { case NonFatal(e2) =>
           System.err.println(s"[verify] $name marker write failed: ${e2.getMessage}")
         }
       }

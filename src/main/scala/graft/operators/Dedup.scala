@@ -171,9 +171,6 @@ object Dedup {
       .orderBy("id_a", "id_b")
   }
 
-  /** Ground-truth exact n-gram Jaccard pairs. All-pairs — intentionally
-    * capped to the first [[cap]] doc_ids; at scale use [[d2MinhashLsh]].
-    */
   /** The capped shingle slice d4/d10/d23 self-join, materialized COMPACT
     * once per execution (localCheckpoint, the d3/t49 pattern) so the
     * floored full-text exchange and the shingle compute pay once per
@@ -183,6 +180,9 @@ object Dedup {
   private def shingledCapped(s: SparkSession, d: String, cap: Int): DataFrame =
     shingled(s, d).filter(col("doc_id") < cap).localCheckpoint()
 
+  /** Ground-truth exact n-gram Jaccard pairs. All-pairs — intentionally
+    * capped to the first [[cap]] doc_ids; at scale use [[d2MinhashLsh]].
+    */
   def d4NgramJaccard(s: SparkSession, d: String, cap: Int = 1000): DataFrame = {
     val sh = shingledCapped(s, d, cap)
     val l = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
@@ -213,11 +213,24 @@ object Dedup {
       .orderBy("id_a", "id_b")
   }
 
-  /** Near-dup cluster assignment: connected components over the verified
-    * LSH pair graph (GraphX — the standard scale path for turning pair
-    * sets into keep/drop decisions; Pregel-style CC converges in
-    * O(diameter) supersteps on the cluster). canonical_id is the minimum
-    * doc_id of the component, i.e. the document a dedup pass keeps.
+  /** Connected components of a pair graph `(id_a, id_b)` as
+    * `(doc_id, canonical_id)`, canonical = the minimum id in the
+    * component (GraphX's Pregel CC, O(diameter) supersteps). Every
+    * node of a pair appears once; nodes without a pair are absent. The
+    * near-dup graphs this runs on are stars and cliques, so the
+    * diameter is small.
+    */
+  private[graft] def components(pairs: DataFrame): DataFrame = {
+    import org.apache.spark.graphx.{Edge, Graph}
+    val edges = pairs.select("id_a", "id_b").rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
+    val cc = Graph.fromEdges(edges, ()).connectedComponents().vertices
+    pairs.sparkSession.createDataFrame(cc).toDF("doc_id", "canonical_id")
+  }
+
+  /** Near-dup cluster assignment: [[components]] over the verified LSH
+    * pair graph — the standard scale path for turning pair sets into
+    * keep/drop decisions. canonical_id is the minimum doc_id of the
+    * component, i.e. the document a dedup pass keeps.
     * The verified pair set and the cluster map are localCheckpoint'ed —
     * materialized once, lineage truncated — so Pregel's iterative
     * evaluation doesn't re-run the LSH chain per superstep and the
@@ -225,26 +238,12 @@ object Dedup {
     * intermediates are exactly what a production pipeline persists
     * between stages.
     */
-  private def clusterMap(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.graphx.{Edge, Graph}
-    val pairs = d2MinhashLsh(s, d).select("id_a", "id_b").localCheckpoint()
-    val edges = pairs.rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val cc = Graph.fromEdges(edges, ()).connectedComponents().vertices
-    s.createDataFrame(cc).toDF("doc_id", "canonical_id").localCheckpoint()
-  }
+  private def clusterMap(s: SparkSession, d: String): DataFrame =
+    components(d2MinhashLsh(s, d).select("id_a", "id_b").localCheckpoint()).localCheckpoint()
 
   def d6DedupClusters(s: SparkSession, d: String): DataFrame =
     clusterMap(s, d).orderBy("doc_id")
 
-  /** d11: QUALITY-AWARE canonical selection — instead of d6's min-id
-    * convention, each near-dup cluster keeps its LONGEST member (the most
-    * complete copy; ties break to the lowest doc_id). One join of the
-    * cluster map to per-doc lengths + a per-cluster top-1 window — both
-    * steps keyed on cluster id, so no skew beyond the largest cluster,
-    * which the pair graph already bounds. This is the policy step real
-    * curation pipelines argue about (keep longest vs newest vs highest
-    * quality score); the operator takes the ranking as a plan, not code.
-    */
   /** Cluster members ranked by the keep-LONGEST policy (rn = 1 is the
     * keeper). Shared by [[d11KeepBest]] and the p3 curation drop list.
     */
@@ -267,6 +266,15 @@ object Dedup {
   def dropListKeepBest(s: SparkSession, d: String): DataFrame =
     rankedMembers(s, d).filter(col("rn") > 1).select("doc_id")
 
+  /** d11: QUALITY-AWARE canonical selection — instead of d6's min-id
+    * convention, each near-dup cluster keeps its LONGEST member (the most
+    * complete copy; ties break to the lowest doc_id). One join of the
+    * cluster map to per-doc lengths + a per-cluster top-1 window — both
+    * steps keyed on cluster id, so no skew beyond the largest cluster,
+    * which the pair graph already bounds. This is the policy step real
+    * curation pipelines argue about (keep longest vs newest vs highest
+    * quality score); the operator takes the ranking as a plan, not code.
+    */
   def d11KeepBest(s: SparkSession, d: String): DataFrame = {
     rankedMembers(s, d)
       .groupBy(col("canonical_id").as("cluster_id"))
@@ -420,17 +428,11 @@ object Dedup {
     * output, so GraphX's supersteps don't re-run the candidate join and
     * Levenshtein verify.
     */
-  def d15FuzzyClusters(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.graphx.{Edge, Graph}
-    val pairs = fuzzyPairsUnsorted(s, d).select("id_a", "id_b")
-    val edges = pairs.rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val cc = Graph.fromEdges(edges, ()).connectedComponents().vertices
-    s.createDataFrame(cc)
-      .toDF("doc_id", "cluster_id")
-      .groupBy("cluster_id")
+  def d15FuzzyClusters(s: SparkSession, d: String): DataFrame =
+    components(fuzzyPairsUnsorted(s, d))
+      .groupBy(col("canonical_id").as("cluster_id"))
       .agg(count(lit(1)).as("n_members"), max("doc_id").as("max_doc"))
       .orderBy("cluster_id")
-  }
 
   /** d14: blocked fuzzy matching by edit distance — sorted-neighborhood
     * candidate generation, then a Levenshtein verify on the 60-char
@@ -609,23 +611,6 @@ object Dedup {
       .distinct()
   }
 
-  /** d18: URL-canonicalization dedup — the web-crawl pipeline stage that
-    * collapses scheme/host case, `www.` prefixes, default ports,
-    * tracking query params (`utm_*`), fragments, and trailing slashes
-    * before keeping the best document per canonical URL. The raw URLs
-    * are a deterministic in-plan fixture (documents carry no URL
-    * column), spread over four surface variants per canonical target;
-    * the canonicalizer itself is GENERAL string logic — regex over the
-    * raw value, not variant-aware — and the DuckDB oracle predicts the
-    * canonical form from the generating arithmetic, so any
-    * normalization bug breaks the hash. Keep-best is a window over the
-    * canonical key (high cardinality ⇒ well-spread partitions); one
-    * shuffle end to end, scan-shaped otherwise.
-    */
-  /** (doc_id, n_chars, canonical_url) for the whole corpus — d18's raw
-    * URL fixture run through the REAL canonicalizer. Shared by d18 and
-    * the incremental-dedup frontier check (d21).
-    */
   /** The raw-URL fixture expression over (doc_id, source) — path key
     * doc_id%60 vs the fixture's source=doc_id%20 ⇒ canonical groups of
     * stride 60; surface variant steps by ⌊doc_id/20⌋ so every group
@@ -660,6 +645,10 @@ object Dedup {
     concat(scheme, lit("://"), hostNoPort, pathClean)
   }
 
+  /** (doc_id, n_chars, canonical_url) for the whole corpus — d18's raw
+    * URL fixture run through the REAL canonicalizer. Shared by d18 and
+    * the incremental-dedup frontier check (d21).
+    */
   private def canonicalUrls(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(
@@ -668,6 +657,19 @@ object Dedup {
         canonicalizeUrl(rawUrlFixture(col("doc_id"), col("source"))).as("canonical_url")
       )
 
+  /** d18: URL-canonicalization dedup — the web-crawl pipeline stage that
+    * collapses scheme/host case, `www.` prefixes, default ports,
+    * tracking query params (`utm_*`), fragments, and trailing slashes
+    * before keeping the best document per canonical URL. The raw URLs
+    * are a deterministic in-plan fixture (documents carry no URL
+    * column), spread over four surface variants per canonical target;
+    * the canonicalizer itself is GENERAL string logic — regex over the
+    * raw value, not variant-aware — and the DuckDB oracle predicts the
+    * canonical form from the generating arithmetic, so any
+    * normalization bug breaks the hash. Keep-best is a window over the
+    * canonical key (high cardinality ⇒ well-spread partitions); one
+    * shuffle end to end, scan-shaped otherwise.
+    */
   def d18UrlDedup(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val canon = canonicalUrls(s, d)
@@ -714,23 +716,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** d21: INCREMENTAL dedup against an already-indexed reference corpus —
-    * the crawl-frontier check ("have we seen this URL before?") that at
-    * 100 TB must NOT re-join the whole historical corpus per batch. The
-    * reference half (doc_id below the midpoint — "everything ingested so
-    * far") is folded into ONE bloom filter with Spark's own
-    * BloomFilterAggregate (a mergeable KB–MB sketch, one aggregate scan,
-    * broadcast to the probe side); new arrivals probe the bloom first —
-    * no false negatives, so misses (the overwhelming majority of a real
-    * frontier) short-circuit without touching the index — and only
-    * bloom-admitted candidates reach the exact confirm join that kills
-    * false positives and attaches the matched reference doc. The answer
-    * is therefore EXACT (the DuckDB oracle is the plain join) while the
-    * expensive join runs over O(dups + fp) rows instead of O(new);
-    * ScalaTest pins the prefilter admitting every true dup and its
-    * false-positive rate. Keys are canonical URLs (d18's canonicalizer)
-    * because the fixture corpus has no exact-text dups across halves.
-    */
   /** d21's shared pipeline front half: midpoint cut, (reference, new)
     * halves, reference bloom. ONE definition consumed by both the
     * oracle-gated query and the test probe, so an edit to the cut
@@ -755,6 +740,23 @@ object Dedup {
     (old, nw, bloomBytes)
   }
 
+  /** d21: INCREMENTAL dedup against an already-indexed reference corpus —
+    * the crawl-frontier check ("have we seen this URL before?") that at
+    * 100 TB must NOT re-join the whole historical corpus per batch. The
+    * reference half (doc_id below the midpoint — "everything ingested so
+    * far") is folded into ONE bloom filter with Spark's own
+    * BloomFilterAggregate (a mergeable KB–MB sketch, one aggregate scan,
+    * broadcast to the probe side); new arrivals probe the bloom first —
+    * no false negatives, so misses (the overwhelming majority of a real
+    * frontier) short-circuit without touching the index — and only
+    * bloom-admitted candidates reach the exact confirm join that kills
+    * false positives and attaches the matched reference doc. The answer
+    * is therefore EXACT (the DuckDB oracle is the plain join) while the
+    * expensive join runs over O(dups + fp) rows instead of O(new);
+    * ScalaTest pins the prefilter admitting every true dup and its
+    * false-positive rate. Keys are canonical URLs (d18's canonicalizer)
+    * because the fixture corpus has no exact-text dups across halves.
+    */
   def d21IncrementalDedup(s: SparkSession, d: String): DataFrame = {
     val (old, nw, bloomBytes) = d21Halves(s, d)
     val cand =
@@ -841,20 +843,6 @@ object Dedup {
       .orderBy("id_a", "id_b")
   }
 
-  /** d23: LSH BAND-PLAN AUDIT — the tuning table an operator reads
-    * before picking (bands b × rows r) for a 100 TB MinHash dedup run:
-    * for every factorization of a 16-hash signature, the expected
-    * collision probability 1−(1−j^r)^b evaluated on the EXACT Jaccard
-    * of the ground-truth pair domain (d4's capped form), reported as
-    * expected candidate volume, recall over true dups (j ≥ 0.5), and
-    * the candidate:true precision proxy. All powers are EXPLICIT
-    * repeated squarings (r, b ∈ {1,2,4,8,16}) — exact IEEE multiplies
-    * the oracle replays bit-identically, no pow() to disagree about.
-    * The pair scan is the audit's price and is capped like d4; the
-    * output is 4 rows. At scale this runs on a SAMPLE and its numbers
-    * are what justify the chosen banding (d22 justifies the signature;
-    * d23 the banding).
-    */
   /** d24: CLUSTER-PURITY AUDIT — do near-dup clusters respect metadata
     * boundaries? Per d6 cluster: member count, distinct languages and
     * sources, and language purity (dominant-language share). Mixed-lang
@@ -892,6 +880,20 @@ object Dedup {
       .orderBy("canonical_id")
   }
 
+  /** d23: LSH BAND-PLAN AUDIT — the tuning table an operator reads
+    * before picking (bands b × rows r) for a 100 TB MinHash dedup run:
+    * for every factorization of a 16-hash signature, the expected
+    * collision probability 1−(1−j^r)^b evaluated on the EXACT Jaccard
+    * of the ground-truth pair domain (d4's capped form), reported as
+    * expected candidate volume, recall over true dups (j ≥ 0.5), and
+    * the candidate:true precision proxy. All powers are EXPLICIT
+    * repeated squarings (r, b ∈ {1,2,4,8,16}) — exact IEEE multiplies
+    * the oracle replays bit-identically, no pow() to disagree about.
+    * The pair scan is the audit's price and is capped like d4; the
+    * output is 4 rows. At scale this runs on a SAMPLE and its numbers
+    * are what justify the chosen banding (d22 justifies the signature;
+    * d23 the banding).
+    */
   def d23LshPlan(s: SparkSession, d: String, cap: Int = 1000): DataFrame = {
     val sh = shingledCapped(s, d, cap)
     val l = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
@@ -1028,78 +1030,5 @@ object Dedup {
         round((col("sz") * col("n_clusters")).cast("double") / col("n_docs"), 6).as("corpus_share")
       )
       .orderBy("cluster_size")
-  }
-
-  /** Connected components by ALTERNATING LARGE-STAR / SMALL-STAR (the
-    * O(log n)-round MapReduce CC of Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14) expressed purely in
-    * DataFrame joins/aggregates — no GraphX, no vertex-program runtime:
-    *
-    *  - large-star: every node points its LARGER neighbors at the
-    *    minimum of its closed neighborhood (one groupBy + one join);
-    *  - small-star: every node and its smaller neighbors collapse onto
-    *    the neighborhood minimum (one groupBy + one join).
-    *
-    * Each round is two shuffles keyed on node id; long path graphs
-    * converge in O(log n) rounds where plain min-label propagation
-    * needs O(diameter). Iterates to a FIXPOINT (edge set unchanged),
-    * localCheckpointing per round to cut lineage. Returns min-rooted
-    * star edges as (doc_id, canonical_id), roots included mapping to
-    * themselves — d6's exact output contract, so the two
-    * implementations gate each other (and the same DuckDB transitive-
-    * closure oracle).
-    */
-  private[graft] def bigStarComponents(pairs: DataFrame): DataFrame = {
-    val s = pairs.sparkSession
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e
-        .select(col("a"), col("b"))
-        .union(e.select(col("b").as("a"), col("a").as("b")))
-        .distinct()
-      val m = sym.groupBy("a").agg(least(min("b"), first("a")).as("m"))
-      sym
-        .join(m, "a")
-        .filter(col("b") > col("a"))
-        .select(col("b").as("a"), col("m").as("b"))
-        .distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val dir = e
-        .filter(col("a") =!= col("b"))
-        .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
-        .distinct()
-      val m = dir.groupBy("u").agg(min("v").as("m"))
-      dir
-        .join(m, "u")
-        .select(col("v").as("a"), col("m").as("b"))
-        .union(m.select(col("u").as("a"), col("m").as("b")))
-        .filter(col("a") =!= col("b"))
-        .distinct()
-    }
-    var edges = pairs.select(col("id_a").as("a"), col("id_b").as("b")).localCheckpoint()
-    var stable = false
-    var rounds = 0
-    while (!stable && rounds < 50) { // 50 >> log2(any real graph); loud guard below
-      val next = smallStar(largeStar(edges)).localCheckpoint()
-      stable = next.exceptAll(edges).isEmpty && edges.exceptAll(next).isEmpty
-      edges = next
-      rounds += 1
-    }
-    if (!stable)
-      throw new IllegalStateException("bigStarComponents did not converge in 50 rounds")
-    // converged: edges are (node → component-min) stars; add the roots
-    val roots = edges.select(col("b").as("doc_id")).distinct()
-    edges
-      .select(col("a").as("doc_id"), col("b").as("canonical_id"))
-      .unionByName(roots.withColumn("canonical_id", col("doc_id")))
-      .distinct()
-  }
-
-  /** d28: the GraphX-free cluster map over the SAME d2 pair graph —
-    * output contract identical to d6 (min-id canonical per component).
-    */
-  def d28CcBigstar(s: SparkSession, d: String): DataFrame = {
-    val pairs = d2MinhashLsh(s, d).select("id_a", "id_b").localCheckpoint()
-    bigStarComponents(pairs).orderBy("doc_id")
   }
 }

@@ -1251,46 +1251,57 @@ object Events {
     * whales generate everything. The inequality lens product teams put
     * next to DAU (c30 applies the same statistic to FILE sizes; this
     * is the behavioral version, and the rank axis is users, which c30's
-    * ≤24-rows-per-day shortcut cannot cover). Two keyed shuffles: user
-    * counts, then the within-type rank via [[ScaleRank.withRank]] — a
-    * per-type `row_number` would funnel each type through ONE reducer
-    * (a handful of types × a billion users each = q57's hazard in
-    * group clothing); the stitched rank keeps every window keyed on
-    * (pid, type). With counts and ranks both integers, Σi·xᵢ and Σxᵢ
-    * are EXACT longs (merge-order-free), so the only double is the
-    * final ratio: G = (2·Σi·xᵢ − (n+1)·Σx) / (n·Σx), ties broken
-    * deterministically on (count, user_id).
+    * ≤24-rows-per-day shortcut cannot cover). G = (2·Σi·xᵢ − (n+1)·Σx)
+    * / (n·Σx) over the users sorted by count, and Σi·xᵢ does not depend
+    * on how tied counts are ordered: the m users with count x and o
+    * users below it hold ranks o+1..o+m, contributing x·(m·o +
+    * m(m+1)/2). So no per-user rank is needed — user counts, then the
+    * (type, count) histogram, then `o` as a running sum over one row
+    * per DISTINCT count (a per-type window far smaller than the user
+    * table). 2·Σi·x is summed exactly in DECIMAL (at 10⁹ users a long
+    * would wrap), so the only double is the final ratio.
     */
-  def e44EngagementGini(s: SparkSession, d: String): DataFrame = {
-    val counts = Tables
-      .events(s, d)
-      .groupBy("event_type", "user_id")
-      .agg(count(lit(1)).as("cnt"))
-    ScaleRank
-      .withRank(counts, Seq("event_type"), Seq(col("cnt"), col("user_id")), "i")
+  def e44EngagementGini(s: SparkSession, d: String): DataFrame =
+    giniSums(
+      Tables
+        .events(s, d)
+        .groupBy("event_type", "user_id")
+        .agg(count(lit(1)).as("cnt"))
+    ).select(
+      col("event_type"),
+      col("n_users"),
+      col("total_events"),
+      // ONE cast to double per term so the SQL-literal path (2.0
+      // parses as DECIMAL) can't diverge
+      round(
+        (col("swx2").cast("double") -
+          (col("n_users") + lit(1L)) * col("total_events").cast("double")) /
+          (col("n_users") * col("total_events").cast("double")),
+        6
+      ).as("gini")
+    ).orderBy("event_type")
+
+  /** e44's exact sums per `event_type` over per-user counts `cnt`:
+    * n_users, total_events = Σx and swx2 = 2·Σi·xᵢ (DECIMAL) with i the
+    * 1-based rank under ascending count, from the count histogram.
+    */
+  private[graft] def giniSums(counts: DataFrame): DataFrame = {
+    val below = Window
+      .partitionBy("event_type")
+      .orderBy("cnt")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    counts
+      .groupBy("event_type", "cnt")
+      .agg(count(lit(1)).as("m"))
+      .withColumn("o", coalesce(sum("m").over(below), lit(0L)))
       .groupBy("event_type")
       .agg(
-        count(lit(1)).as("n_users"),
-        sum("cnt").as("total_events"),
-        // Σi·x in DECIMAL: at 10⁹ users the long sum would wrap
-        // (~5·10¹⁹ > 2⁶³) — decimal(28,0) is exact to 10²⁸ and the
-        // formula goes double afterwards anyway
-        sum((col("i") * col("cnt")).cast("decimal(28,0)")).as("swx")
+        sum("m").as("n_users"),
+        sum(col("cnt") * col("m")).as("total_events"),
+        // 2·x·(m·o + m(m+1)/2) = x·m·(2o+m+1): integer, no halving
+        sum((col("m") * (col("o") * 2 + col("m") + 1)).cast("decimal(28,0)") * col("cnt"))
+          .as("swx2")
       )
-      .select(
-        col("event_type"),
-        col("n_users"),
-        col("total_events"),
-        // 2·Σi·x stays an exact long; ONE cast to double per term so the
-        // SQL-literal path (2.0 parses as DECIMAL) can't diverge
-        round(
-          ((col("swx") * 2).cast("double") -
-            (col("n_users") + lit(1L)) * col("total_events").cast("double")) /
-            (col("n_users") * col("total_events").cast("double")),
-          6
-        ).as("gini")
-      )
-      .orderBy("event_type")
   }
 
   /** e45: SEASONAL-NAIVE FORECAST BACKTEST — the "is a model even worth

@@ -1228,45 +1228,19 @@ object Relational {
     * ("the top decile holds X% of revenue"). Spend totals are
     * decimal(18,2)-quantized (o_totalprice is 2 dp, so the sums are
     * EXACT and the decile cut never moves on a float ulp). The global
-    * rank is computed SCALE-SAFELY (the round-11 verdict's fix) by
-    * [[ScaleRank.withRank]]: a distributed range sort on (spend desc,
-    * custkey), per-partition `row_number` windows (parallel — every
-    * WindowExec partitioned by `pid`), offsets stitched from the
-    * metadata-sized per-partition count table (no driver collect
-    * anywhere). `decile(rank, N)` is then the
-    * closed-form ntile: the first N mod 10 tiles take ⌈N/10⌉ rows.
-    * Identical output to a global `ntile(10)` window, but no
-    * single-task sort — at 1.5 B customers the heavy lifting is an
+    * rank is a plain `row_number()` over (spend desc, custkey), which
+    * GlobalWindowRewrite plans as [[graft.plans.GlobalRankExec]]: a
+    * distributed range sort, then per-partition offsets stitched from
+    * the count metadata (no driver collect anywhere). `decile(rank, N)`
+    * is then the closed-form ntile: the first N mod 10 tiles take
+    * ⌈N/10⌉ rows. Identical output to a global `ntile(10)` window, but
+    * no single-task sort — at 1.5 B customers the heavy lifting is an
     * ordinary range-partitioned sort. The cumulative (lift) curve
     * folds over the 10-row tile table with a broadcast triangular
     * self-join, so the whole plan has zero unpartitioned windows.
     */
   def q57DecileLift(s: SparkSession, d: String): DataFrame = {
-    val spend = Tables
-      .orders(s, d)
-      .groupBy("o_custkey")
-      .agg(sum(round(col("o_totalprice"), 2).cast("decimal(18,2)")).as("spend"))
-    val nTot = spend.agg(count(lit(1)).as("n_total"))
-    // closed-form ntile(10) from the scale-safe rank: the first
-    // n mod 10 tiles take ⌈n/10⌉ rows (all tile math rides a 1-row
-    // broadcast, so there is no driver-side count either)
-    val qSize = floor(col("n_total") / 10)
-    val mBig = col("n_total") % 10
-    val bigCut = (qSize + 1) * mBig
-    val ranked = ScaleRank
-      .withRank(spend, Seq.empty, Seq(desc("spend"), col("o_custkey")), "rank")
-      .crossJoin(broadcast(nTot))
-      .withColumn(
-        "decile",
-        when(
-          col("rank") <= bigCut,
-          floor((col("rank") - 1) / (qSize + 1)) + 1
-        ).otherwise( // qSize=0 ⇒ bigCut=n ⇒ branch unreachable; greatest(,1) keeps the expr total
-          mBig + floor((col("rank") - 1 - bigCut) / greatest(qSize, lit(1L))) + 1
-        )
-          .cast("int")
-      )
-    val tiles = ranked
+    val tiles = q57Deciles(s, d)
       .groupBy("decile")
       .agg(
         count(lit(1)).as("n_customers"),
@@ -1289,6 +1263,37 @@ object Relational {
         round(col("cum_rev").cast("double") / col("total_rev").cast("double"), 6).as("cum_share")
       )
       .orderBy("decile")
+  }
+
+  /** q57's per-customer (spend, rank, decile) rows: the plan its tile
+    * table checkpoints, split out so the rank's plan stays inspectable.
+    */
+  private[graft] def q57Deciles(s: SparkSession, d: String): DataFrame = {
+    val spend = Tables
+      .orders(s, d)
+      .groupBy("o_custkey")
+      .agg(sum(round(col("o_totalprice"), 2).cast("decimal(18,2)")).as("spend"))
+    val nTot = spend.agg(count(lit(1)).as("n_total"))
+    // closed-form ntile(10) from the global rank: the first
+    // n mod 10 tiles take ⌈n/10⌉ rows (all tile math rides a 1-row
+    // broadcast, so there is no driver-side count either)
+    val qSize = floor(col("n_total") / 10)
+    val mBig = col("n_total") % 10
+    val bigCut = (qSize + 1) * mBig
+    val byRank = Window.orderBy(desc("spend"), col("o_custkey"))
+    spend
+      .withColumn("rank", row_number().over(byRank).cast("long"))
+      .crossJoin(broadcast(nTot))
+      .withColumn(
+        "decile",
+        when(
+          col("rank") <= bigCut,
+          floor((col("rank") - 1) / (qSize + 1)) + 1
+        ).otherwise( // qSize=0 ⇒ bigCut=n ⇒ branch unreachable; greatest(,1) keeps the expr total
+          mBig + floor((col("rank") - 1 - bigCut) / greatest(qSize, lit(1L))) + 1
+        )
+          .cast("int")
+      )
   }
 
   /** q58: SKYLINE (Pareto frontier) — the parts no other part beats on
@@ -1325,11 +1330,10 @@ object Relational {
     * inventory-analysis staple, and the warehouse twin of q57's decile
     * lift). Since round 14 the cumulative sum is the PLAIN global
     * window — the decimal GlobalPrefixSum rewrite plans it as a range
-    * exchange + BigDecimal partial stitch (no single-task window, no
-    * ScaleRank scaffolding needed). Class boundaries compare cum·100 ≤
-    * total·80 in DECIMAL (revenue is (18,2)-exact), so the cut can
-    * never move on a float ulp; shares go double only in the final
-    * report row.
+    * exchange + BigDecimal partial stitch (no single-task window).
+    * Class boundaries compare cum·100 ≤ total·80 in DECIMAL (revenue is
+    * (18,2)-exact), so the cut can never move on a float ulp; shares go
+    * double only in the final report row.
     */
   def q60AbcClass(s: SparkSession, d: String): DataFrame = {
     val rev = Tables

@@ -37,20 +37,6 @@ object StreamingBatch {
     */
   private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Run a STATEFUL streaming harness with a right-sized state partition
-    * count. Spark pins the state partition count into the checkpoint at
-    * first start (read from `spark.sql.shuffle.partitions`), and every
-    * micro-batch then pays a per-(partition × state store × batch) commit
-    * — a stream-stream join carries four stores per partition, so at 32
-    * partitions a tiny batch spends its whole wall-clock committing
-    * near-empty stores (measured 9.0 s → 3.0 s on s5 going 32 → 8).
-    * Sizing it is a per-deployment decision: thousands of partitions on a
-    * 1000-executor cluster, `SPARK_GRAFT_STATE_PARTITIONS` (default 8)
-    * here where a whole batch's state fits in a handful of tasks. Only
-    * the streams started inside `body` see the narrowed conf; the
-    * session's batch parallelism is restored before the returned
-    * DataFrame (lazy) is ever executed.
-    */
   /** Final stateful-operator row counts per harness, captured from the
     * last StreamingQueryProgress after each AvailableNow run. The design
     * notes claim watermark eviction keeps state bounded; these let
@@ -62,13 +48,27 @@ object StreamingBatch {
       lastStateRows.put(name, p.stateOperators.map(_.numRowsTotal).sum)
     }
 
+  /** Run a STATEFUL streaming harness with a right-sized state partition
+    * count. Spark pins the state partition count into the checkpoint at
+    * first start (read from `spark.sql.shuffle.partitions`), and every
+    * micro-batch then pays a per-(partition × state store × batch) commit
+    * — a stream-stream join carries four stores per partition, so at 32
+    * partitions a tiny batch spends its whole wall-clock committing
+    * near-empty stores (measured 9.0 s → 3.0 s on s5 going 32 → 8).
+    * Sizing it is a per-deployment decision: thousands of partitions on a
+    * 1000-executor cluster, a constant 8 here where a whole batch's
+    * state fits in a handful of tasks. Only the streams started inside
+    * `body` see the narrowed conf; the session's batch parallelism is
+    * restored before the returned DataFrame (lazy) is ever executed.
+    */
   private def withStatePartitions[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STATE_PARTITIONS", "8"))
+    s.conf.set(key, "8")
     try body
     finally s.conf.set(key, prev)
   }
+
   /** s9's staged input: the events stream split at its time midpoint into
     * two JSON files (half 2 carries the watermark sentinel) — the
     * "pipeline went down mid-stream" scenario. Pure function of the

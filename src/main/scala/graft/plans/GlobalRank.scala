@@ -45,7 +45,8 @@ object GlobalRankMode {
   final case class NtileK(k: Int) extends GlobalRankMode
 }
 
-/** §2.8 whole-operator extension: the SQL surface for ScaleRank.
+/** §2.8 whole-operator extension: scale-safe global ranks as an
+  * optimizer rule.
   *
   * `row_number() / rank() / dense_rank() / percent_rank() / cume_dist()
   * / ntile(k) OVER (ORDER BY …)`
@@ -101,8 +102,7 @@ case class GlobalRankNode(
 }
 
 /** Third idiom: GLOBAL RUNNING TOTAL — `sum(x) OVER (ORDER BY … ROWS
-  * UNBOUNDED PRECEDING)` with no PARTITION BY (ScaleRank.withRunningSum
-  * as an optimizer rule). Same two-pass contract as GlobalRank with the
+  * UNBOUNDED PRECEDING)` with no PARTITION BY. Same two-pass contract as GlobalRank with the
   * count pass swapped for per-partition value partials. Since round 14
   * it covers NULLABLE inputs (per-partition partials carry an
   * any-non-null flag, so the SQL all-null-prefix-is-null semantics

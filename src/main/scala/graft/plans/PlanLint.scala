@@ -43,7 +43,7 @@ object PlanLint {
           "rank/dense_rank/percent_rank/cume_dist/ntile/running-sum/running-min-max/" +
           "literal-offset lag/lead, the GlobalRank rules rewrite it automatically when " +
           "GraftExtensions is installed; ignore-nulls or non-literal offsets and RANGE " +
-          "frames need a partition key or ScaleRank."
+          "frames need a partition key."
       case c: CartesianProductExec =>
         s"CARTESIAN PRODUCT: ${c.left.simpleStringWithNodeId()} x " +
           s"${c.right.simpleStringWithNodeId()} — O(|L|·|R|) pairs. Add an equi-join " +

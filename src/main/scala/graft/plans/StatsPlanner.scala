@@ -133,7 +133,7 @@ object StatsPlanner {
   /** TRANSPARENT stats-driven broadcast: for an inner equi-join whose
     * sides walk down (through deterministic Projects/Filters) to
     * registered parquet relations, inject a BROADCAST hint on the side
-    * whose STORED byte estimate fits the threshold — the query itself
+    * whose STORED byte estimate fits [[BroadcastBytes]] — the query itself
     * never opts in, exactly like the MV rewrite. Filters only shrink a
     * side, so the stored full-table estimate is an upper bound and the
     * hint stays safe under pushed-down predicates. An existing hint on
@@ -142,9 +142,7 @@ object StatsPlanner {
   object StatsBroadcastRule extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan =
       if (StatsRegistry.isEmpty) plan
-      else {
-        val threshold =
-          conf.getConfString("spark.graft.statsBroadcastBytes", (8L << 20).toString).toLong
+      else
         plan.transformUp {
           case j: Join
               if j.joinType == Inner && j.condition.nonEmpty && j.hint == JoinHint.NONE =>
@@ -156,15 +154,19 @@ object StatsPlanner {
                 }
               }
             (estOf(j.left), estOf(j.right)) match {
-              case (Some(l), Some(r)) if math.min(l, r) <= threshold =>
+              case (Some(l), Some(r)) if math.min(l, r) <= BroadcastBytes =>
                 val hint = HintInfo(strategy = Some(BROADCAST))
                 if (r <= l) j.copy(hint = JoinHint(None, Some(hint)))
                 else j.copy(hint = JoinHint(Some(hint), None))
               case _ => j
             }
         }
-      }
   }
+
+  /** The stored-estimate broadcast threshold: 8 MB, under Spark's
+    * 10 MB `autoBroadcastJoinThreshold` default.
+    */
+  val BroadcastBytes: Long = 8L << 20
 
   /** Inner equi-join on the same-named `key`, with the physical
     * strategy chosen from the CATALOG: broadcast the smaller side if
@@ -180,7 +182,7 @@ object StatsPlanner {
       rightName: String,
       key: String,
       catalog: Map[String, TableStats],
-      broadcastBytes: Long = 8L << 20,
+      broadcastBytes: Long = BroadcastBytes,
       skewRatio: Double = 8.0,
       maxSalt: Int = 16
   ): DataFrame = {

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned table store with an ATOMIC publish step — the minimal
@@ -43,7 +44,7 @@ object SnapshotStore {
     val st = Files.walk(p)
     try
       st.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { try Files.deleteIfExists(f) catch { case _: Throwable => () } })
+        .forEach(f => { try Files.deleteIfExists(f) catch { case NonFatal(_) => () } })
     finally st.close()
   }
 

@@ -77,45 +77,6 @@ class Round12Spec extends AnyFunSuite {
     assert(ok.collect().map(_.getInt(0)).toSeq == Seq(6))
   }
 
-  test("ScaleRank.withRank equals a global row_number, grouped and ungrouped") {
-    import org.apache.spark.sql.expressions.Window
-    val df = spark
-      .range(5000)
-      .select(
-        (col("id") % 7).as("g"),
-        pmod(xxhash64(col("id")), lit(997)).as("x"),
-        col("id")
-      )
-    // grouped: rank within g under (x, id)
-    val got = graft.operators.ScaleRank
-      .withRank(df, Seq("g"), Seq(col("x"), col("id")), "r")
-      .select("g", "id", "r")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    val want = df
-      .withColumn("r", row_number().over(Window.partitionBy("g").orderBy(col("x"), col("id"))))
-      .select("g", "id", "r")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2).toLong)
-      .toMap
-    assert(got == want && got.size == 5000)
-    // ungrouped: global rank
-    val gotG = graft.operators.ScaleRank
-      .withRank(df, Seq.empty, Seq(desc("x"), col("id")), "r")
-      .select("id", "r")
-      .collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
-    val wantG = df
-      .withColumn("r", row_number().over(Window.orderBy(desc("x"), col("id"))))
-      .select("id", "r")
-      .collect()
-      .map(r => r.getLong(0) -> r.getInt(1).toLong)
-      .toMap
-    assert(gotG == wantG)
-  }
-
   test("q58 skyline equals the brute-force strict-dominance recompute") {
     val parts = graft.sources.Tables
       .part(spark, sf)
@@ -207,6 +168,33 @@ class Round12Spec extends AnyFunSuite {
     assert(got.values.forall(g => g >= 0.0 && g < 1.0))
   }
 
+  test("e44's histogram Σi·x equals a per-user row_number Σi·x on tie-heavy random data (5 seeded trials)") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val rnd = new scala.util.Random(20261019L)
+    (1 to 5).foreach { trial =>
+      // counts from 1..6 over ~2000 users: nearly every count is a long
+      // run of ties; a NULL type must rank as an ordinary group
+      val types = Vector(Some("view"), Some("click"), Some("buy"), None)
+      val counts = Vector
+        .tabulate(1500 + rnd.nextInt(1000))(u => (types(rnd.nextInt(4)), u.toLong, 1L + rnd.nextInt(6)))
+        .toDF("event_type", "user_id", "cnt")
+      val got = graft.operators.Events
+        .giniSums(counts)
+        .collect()
+        .map(r => Option(r.getString(0)) -> ((r.getLong(1), r.getLong(2), r.getDecimal(3).toBigIntegerExact)))
+        .toMap
+      val want = counts
+        .withColumn("i", row_number().over(Window.partitionBy("event_type").orderBy("cnt", "user_id")))
+        .groupBy("event_type")
+        .agg(count(lit(1)), sum("cnt"), sum(col("i") * col("cnt") * 2))
+        .collect()
+        .map(r => Option(r.getString(0)) -> ((r.getLong(1), r.getLong(2), java.math.BigInteger.valueOf(r.getLong(3)))))
+        .toMap
+      assert(got == want && got.size == 4, s"trial $trial")
+    }
+  }
+
   test("c33: reading a vacuumed version fails with an explicit error; current reads fine") {
     val report = graft.operators.Maintenance.c33VersionGc(spark, sf).collect()
     assert(report.length == 4)
@@ -273,59 +261,6 @@ class Round12Spec extends AnyFunSuite {
       .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
       .toMap
     assert(got == expected && got.nonEmpty)
-  }
-
-  test("ScaleRank.withRunningSum equals a global window prefix sum, grouped and ungrouped") {
-    import org.apache.spark.sql.expressions.Window
-    val df = spark
-      .range(4000)
-      .select(
-        (col("id") % 5).as("g"),
-        pmod(xxhash64(col("id")), lit(991)).as("x"),
-        (pmod(xxhash64(col("id") + 7), lit(100)) + 1).as("v"),
-        col("id")
-      )
-    val got = graft.operators.ScaleRank
-      .withRunningSum(df, Seq("g"), Seq(col("x"), col("id")), "v", "cum")
-      .select("g", "id", "cum")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    val want = df
-      .withColumn(
-        "cum",
-        sum("v").over(
-          Window
-            .partitionBy("g")
-            .orderBy(col("x"), col("id"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-      )
-      .select("g", "id", "cum")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    assert(got == want && got.size == 4000)
-    val gotG = graft.operators.ScaleRank
-      .withRunningSum(df, Seq.empty, Seq(desc("x"), col("id")), "v", "cum")
-      .select("id", "cum")
-      .collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
-    val wantG = df
-      .withColumn(
-        "cum",
-        sum("v").over(
-          Window
-            .orderBy(desc("x"), col("id"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-      )
-      .select("id", "cum")
-      .collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
-    assert(gotG == wantG)
   }
 
   test("s36 streaming SCD2 is bit-identical to c34's one-shot batch build") {

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 /** Round-13 hardening differentials: the real multi-frame GIF decode
-  * path behind m13b (the last synthetic-proxy modality), ScaleRank's
-  * null-safe offset stitch, and SqlMain's full mid-script evaluation.
+  * path behind m13b (the last synthetic-proxy modality) and SqlMain's
+  * full mid-script evaluation.
   */
 class Round13Spec extends AnyFunSuite {
   import TestSession._
@@ -32,35 +32,6 @@ class Round13Spec extends AnyFunSuite {
     val real = graft.operators.Multimodal.m13bSceneReal(spark, sf).collect().map(_.toString)
     val synth = graft.operators.Multimodal.m13SceneSegments(spark, sf).collect().map(_.toString)
     assert(real.nonEmpty && real.sameElements(synth))
-  }
-
-  test("ScaleRank ranks NULL group keys as an ordinary group (null-safe stitch)") {
-    import spark.implicits._
-    val df = Seq(
-      (Some("a"), 3), (Some("a"), 1), (None: Option[String], 5),
-      (None: Option[String], 2), (Some("b"), 4), (None: Option[String], 9)
-    ).toDF("g", "x")
-    val ranked = graft.operators.ScaleRank
-      .withRank(df, Seq("g"), Seq(col("x")), "r", numPartitions = 3)
-      .collect()
-    assert(ranked.length == 6) // no rows dropped by the offset join
-    val nullRanks = ranked.filter(_.isNullAt(0)).map(r => (r.getInt(1), r.getLong(2))).sortBy(_._1)
-    assert(nullRanks.toSeq == Seq((2, 1L), (5, 2L), (9, 3L))) // window semantics
-    val aRanks = ranked.filter(r => !r.isNullAt(0) && r.getString(0) == "a")
-      .map(r => (r.getInt(1), r.getLong(2))).sortBy(_._1)
-    assert(aRanks.toSeq == Seq((1, 1L), (3, 2L)))
-  }
-
-  test("ScaleRank running sum carries NULL groups too") {
-    import spark.implicits._
-    val df = Seq((None: Option[String], 1L), (None: Option[String], 10L), (Some("a"), 5L))
-      .toDF("g", "x")
-    val sums = graft.operators.ScaleRank
-      .withRunningSum(df, Seq("g"), Seq(col("x")), "x", "cum", numPartitions = 2)
-      .collect()
-    assert(sums.length == 3)
-    val nulls = sums.filter(_.isNullAt(0)).map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(nulls.toSeq == Seq((1L, 1L), (10L, 11L)))
   }
 
   test("GlobalRank: SQL global row_number plans distributed, matches window semantics") {

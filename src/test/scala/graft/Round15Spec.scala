@@ -291,7 +291,7 @@ class Round15Spec extends AnyFunSuite {
     assert(s37.count() > 0)
   }
 
-  test("bigStarComponents == union-find on random graphs incl. long paths and cliques (5 seeded trials)") {
+  test("connected components == union-find on random graphs incl. long paths and cliques (5 seeded trials)") {
     import spark.implicits._
     val rnd = new scala.util.Random(20260818L)
     (1 to 5).foreach { trial =>
@@ -315,7 +315,7 @@ class Round15Spec extends AnyFunSuite {
       }
       val expect = parent.keys.map(k => k -> find(k)).toMap
       val got = graft.operators.Dedup
-        .bigStarComponents(edges.toDF("id_a", "id_b"))
+        .components(edges.toDF("id_a", "id_b"))
         .collect()
         .map(r => r.getLong(0) -> r.getLong(1))
         .toMap
@@ -552,6 +552,19 @@ class Round15Spec extends AnyFunSuite {
     )
     assert(unwrap(sd).collect { case g: graft.plans.GlobalRangePrefixSumExec => g }.nonEmpty)
     assert(sd.count() == 1000)
+  }
+
+  test("q57's rank under its tile checkpoint plans as GlobalRankExec — no unpartitioned WindowExec") {
+    // LintSurfaceSpec lints q57's final plan, where the checkpoint hides
+    // the rank; this pins the subplan the checkpoint materializes
+    val exec = unwrap(graft.operators.Relational.q57Deciles(spark, sf))
+    assert(exec.collect { case g: graft.plans.GlobalRankExec => g }.nonEmpty, s"q57:\n$exec")
+    assert(
+      exec.collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec if w.partitionSpec.isEmpty => w
+      }.isEmpty,
+      s"q57 still plans a 1-task window:\n$exec"
+    )
   }
 
   test("q69/q70/e52 plans ride the new execs — no unpartitioned WindowExec anywhere") {
