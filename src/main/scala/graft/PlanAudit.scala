@@ -23,9 +23,9 @@ object PlanAudit {
       "e15_active_users"            -> "WAU as explode+groupBy — pure equi-shuffle",
       "e14_sliding_rate"            -> "RANGE window over the per-second aggregate series",
       "q24_topk_custom"             -> "explicit TopKPerKey physical operator",
-      "q37_auto_topk"               -> "window-top-k idiom auto-rewritten by TopKRewrite",
+      "q37_auto_topk"               -> "window-top-k idiom auto-rewritten by TopKRewrite, which replaces Spark's inferred WindowGroupLimit",
       "q35_salted_join"             -> "deterministic salted join (salt visible in the join keys)",
-      "v5_knn_graph"                -> "kNN graph: block join + TopKPerKey ranking",
+      "v5_knn_graph"                -> "kNN graph: checkpointed edges (floored block join, each pair once, one explode for both directions, TopKPerKey ranking) + final sort",
       "t12_heavy_hitters"           -> "MisraGries partial aggregate + broadcast exact recount",
       "e21_ewma"                    -> "EWMA via contribution-explode + groupBy — no range join",
       "t15_pack"                    -> "sequence packing: per-hash-stream window, no global sort",
@@ -136,7 +136,10 @@ object PlanAudit {
       "q58_skyline"                 -> "skyline: per-size min aggregate -> suffix-min over the SIZE-grain table -> broadcast join back + one corpus filter; no self-join, no corpus window",
       "q59_semi_additive"           -> "semi-additive balance: customers collapsed to (from,to)-interval grain BEFORE the broadcast month-spine range join — months² rows meet the spine, never customers×months",
       "e44_engagement_gini"         -> "engagement gini: (type, count) histogram -> one type-keyed running-sum window over distinct counts -> closed-form exact decimal Σi·x sums; no per-user rank",
-      "v23_knn_mutuality"           -> "kNN mutuality: v5 edge build + ONE keyed self-equi-join on the reversed (dst,src) pair + label join — corpus×k rows, never pairwise",
+      "v23_knn_mutuality"           -> "kNN mutuality: v5's edge build read once — broadcast label join, count over the unordered (least, greatest) pair, one keyed aggregate; no self-join, corpus×k rows, never pairwise",
+      "d4_ngram_jaccard"            -> "capped all-pairs Jaccard: BNLJ over checkpointed shingles, final order sorted inside one partition (no range sampler re-running the BNLJ)",
+      "d10_containment"             -> "capped all-pairs containment: BNLJ over checkpointed shingles, final order sorted inside one partition (no range sampler re-running the BNLJ)",
+      "p1_curate"                   -> "exact-dedup curation over the doc_id-floored documents scan: per-row token stats on every core",
       "c34_scd2_build"              -> "SCD2 build: change-marker + running-sum + lead windows ALL keyed on user_id; one keyed aggregate; rows out = runs",
       "s35_multi_topic_fanin"       -> "multi-topic fan-in read-back: the landed table partition-prunes on (topic, dt, hr) — one aggregate over the fanned-in store",
       "q60_abc_class"               -> "ABC classes: global running sum planned as GlobalPrefixSum (range exchange + decimal partial stitch) -> exact decimal class cuts -> 3-row report",
@@ -219,7 +222,9 @@ object PlanAudit {
     sb ++= "\nNote: every nested-loop join in this file (t12, t24's N/avgdl, " +
       "c20's orders scalar) is a Cross join against a BROADCAST SINGLE-ROW " +
       "aggregate — the standard way to fold a scalar into a distributed plan " +
-      "without a driver-side collect; each compares 1 row, not a pair space.\n" +
+      "without a driver-side collect; each compares 1 row, not a pair space. " +
+      "The exceptions are d4's and d10's, the ground-truth all-pairs joins, " +
+      "capped to the first 1000 doc_ids.\n" +
       "\nThe full-surface lint inventory is COMMITTED at " +
       "`src/test/resources/lint_expected.tsv` and gated by `LintSurfaceSpec`: " +
       "every `SparkEntry.queries` plan is linted (global windows / cartesians / " +

@@ -134,8 +134,15 @@ object Curate {
       .orderBy("doc_id")
   }
 
+  /** p1: exact-dedup curation — one document per content hash (the min
+    * doc_id of each md5 group), then the per-row quality gates (token
+    * count, stop-word ratio, distinct-token ratio) and a deterministic
+    * hash sample. The per-row token stats are the costly part, so
+    * `documents` is read through [[Dedup.docsFloor]]: a single-row-group
+    * file would otherwise run them in the scan's one task.
+    */
   def p1Curate(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
+    val docs = Dedup.docsFloor(s, d)
     val kept = docs
       .groupBy(md5(col("text")).as("h"))
       .agg(min("doc_id").as("doc_id"))

@@ -27,7 +27,7 @@ object Dedup {
     * production layout; Catalyst prunes columns below the exchange, so
     * only consumed columns ride it).
     */
-  private def docsFloor(s: SparkSession, d: String) =
+  private[operators] def docsFloor(s: SparkSession, d: String) =
     // r19: hash-repartition on doc_id instead of round-robin — keyless
     // repartition pays a serial full-row (text included) determinism
     // sort on the 1-task scan (see Tables.parallelized scaladoc)
@@ -182,35 +182,48 @@ object Dedup {
 
   /** Ground-truth exact n-gram Jaccard pairs. All-pairs — intentionally
     * capped to the first [[cap]] doc_ids; at scale use [[d2MinhashLsh]].
+    * The pair set is ordered inside ONE partition (see [[capOrdered]]).
     */
   def d4NgramJaccard(s: SparkSession, d: String, cap: Int = 1000): DataFrame = {
     val sh = shingledCapped(s, d, cap)
     val l = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
     val r = sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-    withJaccard(l.crossJoin(r).filter(col("id_a") < col("id_b")))
-      .filter(col("jaccard") >= 0.5)
-      .select("id_a", "id_b", "jaccard")
-      .orderBy("id_a", "id_b")
+    capOrdered(
+      withJaccard(l.crossJoin(r).filter(col("id_a") < col("id_b")))
+        .filter(col("jaccard") >= 0.5)
+        .select("id_a", "id_b", "jaccard")
+    )
   }
+
+  /** The final (id_a, id_b) order of a capped all-pairs result, sorted
+    * inside one partition. The set is bounded by the cap (≤ cap² rows),
+    * so one task orders it cheaply; a global `orderBy` would instead
+    * range-partition, and its sampler job re-runs the un-materialized
+    * cross join a second time.
+    */
+  private def capOrdered(pairs: DataFrame): DataFrame =
+    pairs.repartition(1).sortWithinPartitions("id_a", "id_b")
 
   /** Containment near-dup (ordered pairs): C(A→B) = |A∩B| / |A| — the
     * asymmetric score that catches a SMALL document embedded in a larger
     * one, which symmetric Jaccard dilutes (j ≥ τ implies c ≥ τ but not
     * vice versa). Ground-truth form, capped like [[d4NgramJaccard]]; the
     * scale path is the d2 band join with this verify expression, whose
-    * candidate recall is then governed by the banding threshold.
+    * candidate recall is then governed by the banding threshold. The
+    * pair set is ordered inside ONE partition (see [[capOrdered]]).
     */
   def d10Containment(s: SparkSession, d: String, tau: Double = 0.8, cap: Int = 1000): DataFrame = {
     val sh = shingledCapped(s, d, cap)
     val l = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
     val r = sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-    l.crossJoin(r)
-      .filter(col("id_a") =!= col("id_b"))
-      .withColumn("ji", GraftExpressions.sortedIntersectSize(col("sh_a"), col("sh_b")))
-      .withColumn("containment", round(col("ji").cast("double") / size(col("sh_a")), 4))
-      .filter(col("containment") >= tau)
-      .select("id_a", "id_b", "containment")
-      .orderBy("id_a", "id_b")
+    capOrdered(
+      l.crossJoin(r)
+        .filter(col("id_a") =!= col("id_b"))
+        .withColumn("ji", GraftExpressions.sortedIntersectSize(col("sh_a"), col("sh_b")))
+        .withColumn("containment", round(col("ji").cast("double") / size(col("sh_a")), 4))
+        .filter(col("containment") >= tau)
+        .select("id_a", "id_b", "containment")
+    )
   }
 
   /** Connected components of a pair graph `(id_a, id_b)` as

@@ -1834,8 +1834,8 @@ object Events {
     * [[graft.plans.RollingQuantileExec]] — two lazy-deletion heaps, O(log
     * k) per row, O(k) state per task — under the SAME sorted-index
     * definition (`element_at(sort_array(win), ceil(0.95·n))`) and the
-    * same DuckDB oracle, just with a 1000-row frame. RankScaleBench's
-    * `rolling_q` row measures the crossover at 50M.
+    * same DuckDB oracle, just with a 1000-row frame. SCALING.md records
+    * the measured crossover (2M and 10M rows at k=1000).
     */
   def e57bRollingP95Wide(s: SparkSession, d: String): DataFrame = {
     val ev = Tables

@@ -102,21 +102,34 @@ object Similarity {
   }
 
   /** Exact k-NN GRAPH (every vector's top-k neighbors — the corpus=query
-    * shape where v1's broadcast-the-queries plan breaks): pair cosines
-    * come from the same balanced block self-join as Dedup.d5b (equi-join
-    * only, each unordered pair computed ONCE, then emitted in both
-    * directions), and per-vector ranking is the custom bounded-heap
-    * [[graft.plans.TopK.topKPerKey]] operator — ≤ k rows per (vector,
-    * partition) ride the ranking exchange instead of a full per-vector
-    * sort. Exact (no ANN recall gap), so DuckDB's brute-force top-k is
-    * the oracle. The edge table is localCheckpoint'ed, so consumers that
-    * read it several times (v16's and v23's self-joins) don't re-run the
-    * block join.
+    * shape where v1's broadcast-the-queries plan breaks), ordered by
+    * (q_id, cos desc, c_id). The edges come from [[knnEdges]]; the edge
+    * table is localCheckpoint'ed so consumers that read it several times
+    * (v9's iterations, v16's self-joins, v30's beam rounds) don't re-run
+    * the block join. Exact (no ANN recall gap), so DuckDB's brute-force
+    * top-k is the oracle.
     */
-  def v5KnnGraph(s: SparkSession, d: String, k: Int = 3, nBlocks: Int = 8): DataFrame = {
+  def v5KnnGraph(s: SparkSession, d: String, k: Int = 3, nBlocks: Int = 8): DataFrame =
+    knnEdges(s, d, k, nBlocks)
+      .localCheckpoint()
+      .orderBy(col("q_id"), desc("cos"), col("c_id"))
+
+  /** The directed kNN edges `(q_id, c_id, cos)`, in no set order: every
+    * vector's top-k by (cos desc, c_id asc), cos rounded to 4 places. Pair cosines
+    * come from the same balanced block self-join as Dedup.d5b (equi-join
+    * only, each unordered pair computed ONCE); one explode emits both
+    * directions of a pair from that single row, and per-vector ranking is
+    * the custom bounded-heap [[graft.plans.TopK.topKPerKey]] operator —
+    * ≤ k rows per (vector, partition) ride the ranking exchange instead of
+    * a full per-vector sort. The embeddings scan is floored by
+    * [[graft.sources.Tables.parallelized]]: a single-row-group file plans
+    * as one scan task, which would leave the block join on fewer cores
+    * than the session has.
+    */
+  private def knnEdges(s: SparkSession, d: String, k: Int, nBlocks: Int = 8): DataFrame = {
     import graft.plans.GraftExpressions
     val e = Tables
-      .embeddings(s, d)
+      .parallelized(Tables.embeddings(s, d), col("vec_id"))
       .select(
         col("vec_id"),
         col("embedding"),
@@ -131,7 +144,7 @@ object Similarity {
       col("vec_id").as("id_b"), col("embedding").as("emb_b"), col("nrm").as("nrm_b"),
       explode(sequence(lit(0), col("blk"))).as("k1"), col("blk").as("k2")
     )
-    val pairs = l
+    val directed = l
       .join(r, Seq("k1", "k2"))
       .filter((col("k1") === col("k2") && col("id_a") < col("id_b")) || col("k1") < col("k2"))
       .select(
@@ -139,14 +152,18 @@ object Similarity {
         col("id_b"),
         (GraftExpressions.dotF(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b"))).as("cos")
       )
-    val directed = pairs
-      .select(col("id_a").as("q_id"), col("id_b").as("c_id"), col("cos"))
-      .union(pairs.select(col("id_b").as("q_id"), col("id_a").as("c_id"), col("cos")))
+      .select(
+        explode(
+          array(
+            struct(col("id_a").as("q_id"), col("id_b").as("c_id"), col("cos")),
+            struct(col("id_b").as("q_id"), col("id_a").as("c_id"), col("cos"))
+          )
+        ).as("e")
+      )
+      .select("e.*")
     graft.plans.TopK
       .topKPerKey(directed, Seq("q_id"), "cos", "c_id", k)
       .select(col("q_id"), col("c_id"), round(col("cos"), 4).as("cos"))
-      .localCheckpoint()
-      .orderBy(col("q_id"), desc("cos"), col("c_id"))
   }
 
   /** Per-label centroid components: elementwise mean via posexplode +
@@ -1223,35 +1240,32 @@ object Similarity {
     * vectors depress it; a healthy embedding space for clustering or
     * kNN-graph dedup sits high), and it decides whether downstream
     * graph ops (v9 PageRank, v16 triangles, d6 clusters) run on the
-    * mutual subgraph or the full one. Reuses [[v5KnnGraph]]'s
-    * block-bounded edge build verbatim, then ONE self-equi-join on the
-    * reversed key pair (edges are corpus×k rows, the join is keyed on
-    * (dst, src) — never pairwise) and a label join + keyed aggregate.
+    * mutual subgraph or the full one. Reads [[knnEdges]] once, with no
+    * self-join: a broadcast label join, a count over each edge's
+    * unordered pair `(least, greatest)` — 2 means its reverse edge
+    * exists, since a vector's top-k holds a neighbor at most once — and
+    * one keyed aggregate per label (edges are corpus×k rows, never
+    * pairwise). A NULL label reports `n_mutual = 0`, as in the oracle
+    * SQL, whose per-label mutual counts join back on label (NULL matches
+    * no label).
     */
   def v23KnnMutuality(s: SparkSession, d: String, k: Int = 3): DataFrame = {
-    val edges = v5KnnGraph(s, d, k).select(col("q_id"), col("c_id"))
-    val mutual = edges.join(
-      edges.select(col("c_id").as("q_id"), col("q_id").as("c_id")),
-      Seq("q_id", "c_id"),
-      "left_semi"
-    )
-    val labels = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
-    val perLabel = edges
-      .join(labels, edges("q_id") === labels("vec_id"))
+    val labels = Tables.embeddings(s, d).select(col("vec_id").as("q_id"), col("label"))
+    val pair = Window.partitionBy(least(col("q_id"), col("c_id")), greatest(col("q_id"), col("c_id")))
+    knnEdges(s, d, k)
+      .select(col("q_id"), col("c_id"))
+      .join(broadcast(labels), "q_id")
+      .withColumn("n_dir", count(lit(1)).over(pair))
       .groupBy("label")
-      .agg(count(lit(1)).as("n_edges"))
-    val perLabelMutual = mutual
-      .join(labels, mutual("q_id") === labels("vec_id"))
-      .groupBy("label")
-      .agg(count(lit(1)).as("n_mutual"))
-    perLabel
-      .join(perLabelMutual, Seq("label"), "left")
+      .agg(
+        count(lit(1)).as("n_edges"),
+        count(when(col("n_dir") === 2 && col("label").isNotNull, lit(1))).as("n_mutual")
+      )
       .select(
         col("label"),
         col("n_edges"),
-        coalesce(col("n_mutual"), lit(0L)).as("n_mutual"),
-        round(coalesce(col("n_mutual"), lit(0L)).cast("double") / col("n_edges"), 6)
-          .as("mutual_frac")
+        col("n_mutual"),
+        round(col("n_mutual").cast("double") / col("n_edges"), 6).as("mutual_frac")
       )
       .orderBy("label")
   }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -68,13 +69,14 @@ object GraftExtensions {
   private val strategies: Seq[SparkStrategy] =
     Seq(TopKStrategy, GlobalRankStrategy, AsofJoinStrategy, RollingQuantileStrategy)
 
-  /** Install the SQL functions and append whichever rules and strategies
-    * the session lacks — idempotent, so a second call changes nothing.
+  /** Install whichever SQL functions, rules and strategies the session
+    * lacks — idempotent, so a second call changes nothing.
     */
   def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
     val missingRules = rules.filterNot(spark.experimental.extraOptimizations.contains)
     if (missingRules.nonEmpty)

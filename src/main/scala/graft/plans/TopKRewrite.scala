@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
 
@@ -30,6 +30,12 @@ import org.apache.spark.sql.types.IntegerType
   *  - the rank column is dropped by the Project above (its VALUES depend
   *    on the full sort, which the heap never materializes), and
   *  - k ≤ 1024, keeping per-key heap memory trivially bounded.
+  *
+  * Spark's own `InferWindowGroupLimit` runs earlier in the optimizer and
+  * puts a `WindowGroupLimit` under the same `Window`. The node replaces
+  * that limit as well: when the window's child is a limit over the same
+  * partition and order spec that keeps at least k rows per key, the node
+  * reads the limit's child, so the plan holds one top-k, not two.
   */
 object TopKRewrite extends Rule[LogicalPlan] {
 
@@ -38,6 +44,18 @@ object TopKRewrite extends Rule[LogicalPlan] {
     case LessThan(a: Attribute, Literal(k: Int, IntegerType)) if a.semanticEquals(rn)        => Some(k - 1)
     case EqualTo(a: Attribute, Literal(k: Int, IntegerType)) if a.semanticEquals(rn) && k == 1 => Some(1)
     case _ => None
+  }
+
+  private def sameSpecs(a: Seq[Expression], b: Seq[Expression]): Boolean =
+    a.length == b.length && a.zip(b).forall { case (x, y) => x.semanticEquals(y) }
+
+  /** The window's input without a stock group limit that keeps ⊇ its top-k. */
+  private def belowGroupLimit(w: Window, k: Int): LogicalPlan = w.child match {
+    case g: WindowGroupLimit
+        if g.limit >= k && sameSpecs(g.partitionSpec, w.partitionSpec) &&
+          sameSpecs(g.orderSpec, w.orderSpec) =>
+      g.child
+    case c => c
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
@@ -62,7 +80,7 @@ object TopKRewrite extends Rule[LogicalPlan] {
                 if k >= 1 && k <= 1024 &&
                   !p.references.contains(rn) &&
                   projectList.forall(_.deterministic) =>
-              Project(projectList, TopKPerKeyNode(w.partitionSpec, o, t, k, w.child))
+              Project(projectList, TopKPerKeyNode(w.partitionSpec, o, t, k, belowGroupLimit(w, k)))
             case _ => p
           }
         case _ => p

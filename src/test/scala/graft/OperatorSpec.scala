@@ -113,6 +113,23 @@ class WideningSpec extends AnyFunSuite {
     assert(registered.filter(_.startsWith("graft_")).sorted == fns.sorted)
   }
 
+  test("a second register keeps every graft_* SQL function entry (the same ExpressionInfo instance)") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s = spark.newSession()
+    graft.plans.GraftExtensions.register(s)
+    val registry = s.sessionState.functionRegistry
+    def infos = registry
+      .listFunction()
+      .filter(_.funcName.startsWith("graft_"))
+      .map(f => f.funcName -> registry.lookupFunction(FunctionIdentifier(f.funcName)).get)
+      .toMap
+    val before = infos
+    graft.plans.GraftExtensions.register(s)
+    val after = infos
+    assert(before.size == 12 && after.keySet == before.keySet)
+    before.foreach { case (f, info) => assert(after(f) eq info, f) }
+  }
+
   test("dt-partitioned layout gives partition-pruned scans") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft_prune_").toString

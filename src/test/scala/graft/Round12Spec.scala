@@ -263,6 +263,111 @@ class Round12Spec extends AnyFunSuite {
     assert(got == expected && got.nonEmpty)
   }
 
+  /** An embeddings copy for the kNN edge tests: vec_id < 120, with ten
+    * vectors duplicated under new ids (vector 10 twice), so equal cosines
+    * must be ordered by c_id, and a NULL label on every vec_id ≡ 0 mod 4.
+    */
+  private lazy val knnFixture: String = {
+    val dir = TempDirs.create("graft_knn_fixture_")
+    val e = graft.sources.Tables.embeddings(spark, sf).filter(col("vec_id") < 120)
+    val dups = e
+      .filter(col("vec_id") % 10 === 0)
+      .withColumn("vec_id", col("vec_id") + 1000)
+      .union(e.filter(col("vec_id") === 10).withColumn("vec_id", lit(2010L)))
+    e.union(dups)
+      .withColumn("label", when(col("vec_id") % 4 =!= 0, col("label")))
+      .coalesce(1)
+      .write
+      .parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  private def fixtureVectors: Seq[(Long, Option[Int], Array[Float])] =
+    graft.sources.Tables
+      .embeddings(spark, knnFixture)
+      .collect()
+      .map(r => (r.getLong(0), Option(r.get(2)).map(_.asInstanceOf[Int]), r.getSeq[Float](1).toArray))
+      .toSeq
+
+  /** Driver-side exact top-k per vector by (cos desc, c_id asc), with the
+    * same double fold and association order as the engine's cosine.
+    */
+  private def bruteKnn(vs: Seq[(Long, Array[Float])], k: Int): Seq[(Long, Long, Double)] = {
+    def dot(a: Array[Float], b: Array[Float]): Double = {
+      var acc = 0.0
+      var i = 0
+      while (i < math.min(a.length, b.length)) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+      acc
+    }
+    val nrm = vs.map { case (id, v) => id -> math.sqrt(dot(v, v)) }.toMap
+    vs.flatMap { case (q, qv) =>
+      vs.filter(_._1 != q)
+        .map { case (c, cv) => (c, dot(qv, cv) / (nrm(q) * nrm(c))) }
+        .sortBy { case (c, cos) => (-cos, c) }
+        .take(k)
+        .map { case (c, cos) => (q, c, BigDecimal(cos).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble) }
+    }
+  }
+
+  test("v5 kNN graph equals a driver-side exact top-3 with duplicated vectors (cos ties by c_id)") {
+    val vs = fixtureVectors
+    val expected = bruteKnn(vs.map(v => (v._1, v._3)), 3)
+    val got = graft.operators.Similarity
+      .v5KnnGraph(spark, knnFixture)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSeq
+    assert(got.length == 3 * vs.length)
+    assert(got.sortBy(e => (e._1, -e._3, e._2)) == expected.sortBy(e => (e._1, -e._3, e._2)))
+    // the fixture really holds ties: some vector ranks two equal cosines
+    assert(expected.groupBy(e => (e._1, e._3)).exists(_._2.length > 1))
+  }
+
+  test("v5's edge build plans each unordered pair once: no UnionExec in its executed plans") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    val s = spark.newSession()
+    graft.plans.GraftExtensions.register(s)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    s.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
+    // the edge build runs inside v5's localCheckpoint; the plan of that
+    // job (and of the final read) reaches the listener asynchronously
+    graft.operators.Similarity.v5KnnGraph(s, sf).collect()
+    import scala.jdk.CollectionConverters._
+    def plans = seen.asScala.toSeq
+    def edgeBuilds = plans.filter(p => Plans.find(p)(_.isInstanceOf[graft.plans.TopKPerKeyExec]).isDefined)
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (edgeBuilds.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(edgeBuilds.nonEmpty, plans.mkString("\n"))
+    assert(plans.forall(p => Plans.find(p)(_.isInstanceOf[UnionExec]).isEmpty), plans.mkString("\n"))
+  }
+
+  test("v23 mutuality over NULL labels equals a brute-force count (a NULL label reports n_mutual = 0)") {
+    val vs = fixtureVectors
+    val label = vs.map(v => v._1 -> v._2).toMap
+    val edges = bruteKnn(vs.map(v => (v._1, v._3)), 3).map(e => (e._1, e._2))
+    val set = edges.toSet
+    val expected = edges
+      .groupBy(e => label(e._1))
+      .map { case (l, es) =>
+        val mut = if (l.isEmpty) 0 else es.count(e => set.contains((e._2, e._1)))
+        l -> ((es.length.toLong, mut.toLong, math.rint(mut.toDouble / es.length * 1e6) / 1e6))
+      }
+    val got = graft.operators.Similarity
+      .v23KnnMutuality(spark, knnFixture)
+      .collect()
+      .map(r => Option(r.get(0)).map(_.asInstanceOf[Int]) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
+      .toMap
+    assert(got == expected)
+    // the NULL group is present and has mutual edges a label-blind count would report
+    assert(got.contains(None) && edges.exists(e => label(e._1).isEmpty && set.contains((e._2, e._1))))
+  }
+
   test("s36 streaming SCD2 is bit-identical to c34's one-shot batch build") {
     val batch = graft.operators.Maintenance.c34Scd2Build(spark, sf).collect().toSeq
     val stream = graft.operators.StreamingBatch.s36StreamScd2(spark, sf).collect().toSeq

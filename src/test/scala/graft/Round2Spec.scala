@@ -523,6 +523,8 @@ class Round2Spec extends AnyFunSuite {
     val plan = qe.sparkPlan
     assert(plan.collectFirst { case t: graft.plans.TopKPerKeyExec => t }.isDefined, plan.toString)
     assert(plan.collectFirst { case w: org.apache.spark.sql.execution.window.WindowExec => w }.isEmpty)
+    // no WindowGroupLimitExec: the node replaces Spark's inferred group limit, not stacks on it
+    assert(plan.collectFirst { case g: org.apache.spark.sql.execution.window.WindowGroupLimitExec => g }.isEmpty, plan.toString)
     // and the rewrite preserves semantics vs the un-rewritten q9 shape
     val viaWindow = Relational
       .q9TopkGroup(spark, sf) // keeps rn → rule cannot fire there
