@@ -29,9 +29,9 @@ object Bench {
           catch { case NonFatal(e) => System.err.println(s"[bench] warmup $n failed: $e") }
         })
     }
-    // stage the streaming JSON inputs at the BENCH SF untimed (cached
-    // per JVM) so the timed streaming numbers measure the pipelines,
-    // not whichever query stages the shared input first. A failed
+    // stage the streaming JSON inputs at the BENCH SF untimed so the
+    // timed streaming numbers measure the pipelines, not whichever
+    // query stages the shared input first. A failed
     // prestage aborts the run: every query reading that store would
     // otherwise time its build.
     graft.operators.StreamingBatch.prestage(spark, sfDir)

@@ -23,8 +23,7 @@ object StateAudit {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.operators.StreamingBatch.s38StreamAttrition(spark, sfDir).collect()
-    val root = graft.operators.StreamingBatch.s38LastRoot.get(sfDir)
+    val root = graft.operators.StreamingBatch.s38AttritionFold(spark, sfDir)
     val keep = s"$root/keep"
     val bss = graft.sources.BucketedStateStore
     val ids = bss.manifestIds(keep)

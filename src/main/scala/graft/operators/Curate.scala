@@ -169,14 +169,6 @@ object Curate {
       .orderBy("doc_id")
   }
 
-  /** p2: curation with NEAR-dup dedup — the production composition at
-    * 100 TB. The drop list comes from the MinHash-LSH → verify → GraphX
-    * connected-components chain (d2/d6: bucket-join candidate cost, never
-    * all-pairs); everything after the broadcast anti-join is a per-row
-    * map or pushed filter, same as [[p1Curate]]. The DuckDB oracle
-    * recomputes the full chain independently (exact pair set + recursive
-    * CTE clustering + the same gates).
-    */
   /** p3: the FULL curation composition under the keep-best policy —
     * near-dup clusters drop everything but their longest member
     * ([[Dedup.dropListKeepBest]]), then the blocklist gate, the quality
@@ -213,6 +205,14 @@ object Curate {
       .orderBy("doc_id")
   }
 
+  /** p2: curation with NEAR-dup dedup — the production composition at
+    * 100 TB. The drop list comes from the MinHash-LSH → verify → GraphX
+    * connected-components chain (d2/d6: bucket-join candidate cost, never
+    * all-pairs); everything after the broadcast anti-join is a per-row
+    * map or pushed filter, same as [[p1Curate]]. The DuckDB oracle
+    * recomputes the full chain independently (exact pair set + recursive
+    * CTE clustering + the same gates).
+    */
   def p2CurateNearDup(s: SparkSession, d: String): DataFrame = {
     val dropList = Dedup
       .d6DedupClusters(s, d)

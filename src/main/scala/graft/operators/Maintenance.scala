@@ -141,7 +141,7 @@ object Maintenance {
     store
   }
 
-  /** Build the cached one-time stores (c2b merge store, c13 landed
+  /** Build the fixture stores (c2b merge store, c13 landed
     * partitions, c15 bloom index, c16 MV partials) untimed — same
     * discipline as `StreamingBatch.prestage`: the timed bench entries
     * then measure the OPERATOR (versioned read / pruned join / indexed
@@ -149,8 +149,8 @@ object Maintenance {
     * pay the shared staging first.
     */
   def prestage(s: SparkSession, d: String): Unit = {
-    mergeStoreCache.computeIfAbsent(d, _ => buildMergeStore(s, graft.TempDirs.create("graft_c2b_"), d))
-    gdprStoreCache.computeIfAbsent(d, _ => buildMergeStore(s, graft.TempDirs.create("graft_c17_"), d))
+    mergeStore(s, d)
+    gdprStore(s, d)
     landedByDay(s, d)
     bloomIndexStore(s, d)
     mvStore(s, d)
@@ -161,9 +161,9 @@ object Maintenance {
     partEvoStore(s, d)
   }
 
-  // the merge store c2b time-travels into, built once per (JVM, source
-  // dir) so the bench measures the versioned READ, not the store build
-  private val mergeStoreCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The two-version merge store c2b, c18, c25, c27 and c31 read. */
+  private[graft] def mergeStore(s: SparkSession, d: String): String =
+    graft.TempDirs.fixture("graft_c2b_", d)(buildMergeStore(s, _, d))
 
   /** c2b: TIME TRAVEL over the manifest-versioned merge store — read the
     * PRE-merge snapshot (v1) after the merge has already published v2.
@@ -176,10 +176,7 @@ object Maintenance {
     * costs one manifest stat + one immutable-directory scan at any scale.
     */
   def c2bTimeTravel(s: SparkSession, d: String): DataFrame = {
-    val store = mergeStoreCache.computeIfAbsent(
-      d,
-      _ => buildMergeStore(s, graft.TempDirs.create("graft_c2b_"), d)
-    )
+    val store = mergeStore(s, d)
     graft.sources.SnapshotStore
       .readVersion(s, store, 1)
       .select(col("user_id"), col("event_id"), col("event_type"), round(col("value"), 2).as("value"))
@@ -426,44 +423,37 @@ object Maintenance {
   private def bloomSize(nPerFile: Long): Long =
     java.lang.Long.highestOneBit(math.max(8192L, 8L * nPerFile) * 2 - 1)
 
-  // layout + index staged once per (JVM, source dir): the bench then
-  // measures the indexed LOOKUP, which is the operator
-  private val bloomIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def bloomIndexStore(s: SparkSession, d: String): String =
-    bloomIndexCache.computeIfAbsent(
-      d,
-      _ => {
-        val dir = graft.TempDirs.create("graft_c15_")
-        // the realistic adversary: files clustered by ship date, so an
-        // order-key lookup has NO leading-key locality to prune with
-        rangeLayout(
-          Tables.lineitem(s, d),
-          s"$dir/data",
-          16,
-          Seq(col("l_shipdate"), col("l_orderkey"))
+    graft.TempDirs.fixture("graft_c15_", d) { dir =>
+      // the realistic adversary: files clustered by ship date, so an
+      // order-key lookup has NO leading-key locality to prune with
+      rangeLayout(
+        Tables.lineitem(s, d),
+        s"$dir/data",
+        16,
+        Seq(col("l_shipdate"), col("l_orderkey"))
+      )
+      val data = s.read.parquet(s"$dir/data")
+      val m = bloomSize(data.count() / 16)
+      // one bloom per file: each row contributes its key's 3 bit
+      // positions; collect_set dedups them into the file's bit set.
+      // The set is KB-scale per file — an index TABLE, built with one
+      // shuffle, never driver-side state. (A packed-words
+      // representation would be 32× smaller still; the set-of-
+      // positions form keeps build and probe fully declarative.)
+      data
+        .select(
+          input_file_name().as("f"),
+          explode(array(bloomPositions(col("l_orderkey"), m): _*)).as("pos")
         )
-        val data = s.read.parquet(s"$dir/data")
-        val m = bloomSize(data.count() / 16)
-        // one bloom per file: each row contributes its key's 3 bit
-        // positions; collect_set dedups them into the file's bit set.
-        // The set is KB-scale per file — an index TABLE, built with one
-        // shuffle, never driver-side state. (A packed-words
-        // representation would be 32× smaller still; the set-of-
-        // positions form keeps build and probe fully declarative.)
-        data
-          .select(
-            input_file_name().as("f"),
-            explode(array(bloomPositions(col("l_orderkey"), m): _*)).as("pos")
-          )
-          .groupBy("f")
-          .agg(sort_array(collect_set("pos")).as("bits"))
-          .withColumn("m", lit(m))
-          .coalesce(1)
-          .write
-          .parquet(s"$dir/index")
-        dir
-      }
-    )
+        .groupBy("f")
+        .agg(sort_array(collect_set("pos")).as("bits"))
+        .withColumn("m", lit(m))
+        .coalesce(1)
+        .write
+        .parquet(s"$dir/index")
+      dir
+    }
 
   /** The files whose bloom admits `key`, as a driver-side path list —
     * an O(matched files) METADATA collect like c7's directory ops (the
@@ -518,30 +508,24 @@ object Maintenance {
     bloomMatchedPaths(s, dir, key).length.toLong
   }
 
-  // the registered-MV summary staged once per (JVM, source dir) — c16
-  // measures the REWRITTEN query, which is the feature
-  private val mvStoreCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // the registered-MV summary c16 rewrites onto
   private[graft] def mvStore(s: SparkSession, d: String): String =
-    mvStoreCache.computeIfAbsent(
-      d,
-      _ => {
-        val dir = graft.TempDirs.create("graft_c16_")
-        Tables
-          .events(s, d)
-          .select(col("ts").cast("date").as("dt"), col("event_type"), col("value"))
-          .groupBy("dt", "event_type")
-          .agg(
-            count(lit(1)).as("n"),
-            sum("value").as("sv"),
-            min("value").as("mnv"),
-            max("value").as("mxv")
-          )
-          .write
-          .mode("overwrite")
-          .parquet(s"$dir/partials")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_c16_", d) { dir =>
+      Tables
+        .events(s, d)
+        .select(col("ts").cast("date").as("dt"), col("event_type"), col("value"))
+        .groupBy("dt", "event_type")
+        .agg(
+          count(lit(1)).as("n"),
+          sum("value").as("sv"),
+          min("value").as("mnv"),
+          max("value").as("mxv")
+        )
+        .write
+        .mode("overwrite")
+        .parquet(s"$dir/partials")
+      dir
+    }
 
   /** Bind the per-(day, type) partials to raw-events aggregates. Both
     * dims are declared: `event_type` as a bare column and the DAY as
@@ -634,25 +618,19 @@ object Maintenance {
       .orderBy("month_start", "event_type")
   }
 
-  // the persisted stats catalog staged once per (JVM, source dir):
-  // c19 measures the stats-DRIVEN join, not the ANALYZE pass
-  private val statsStoreCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // the persisted stats catalog c19's stats-driven join reads
   private[graft] def statsStore(s: SparkSession, d: String): String =
-    statsStoreCache.computeIfAbsent(
-      d,
-      _ => {
-        val dir = graft.TempDirs.create("graft_c19_")
-        graft.plans.StatsPlanner.save(
-          s, dir, "supplier",
-          graft.plans.StatsPlanner.analyze(Tables.supplier(s, d), Seq("s_nationkey")))
-        graft.plans.StatsPlanner.save(
-          s, dir, "nation",
-          graft.plans.StatsPlanner.analyze(
-            Tables.nation(s, d).select(col("n_nationkey").as("s_nationkey"), col("n_name")),
-            Seq("s_nationkey")))
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_c19_", d) { dir =>
+      graft.plans.StatsPlanner.save(
+        s, dir, "supplier",
+        graft.plans.StatsPlanner.analyze(Tables.supplier(s, d), Seq("s_nationkey")))
+      graft.plans.StatsPlanner.save(
+        s, dir, "nation",
+        graft.plans.StatsPlanner.analyze(
+          Tables.nation(s, d).select(col("n_nationkey").as("s_nationkey"), col("n_name")),
+          Seq("s_nationkey")))
+      dir
+    }
 
   /** c19: STATS-DRIVEN JOIN — the supplier⋈nation dashboard planned by
     * [[graft.plans.StatsPlanner.statsJoin]] from the PERSISTED catalog
@@ -681,22 +659,17 @@ object Maintenance {
       .orderBy("n_name")
   }
 
-  // TPC-H customer/orders catalog for c19b, staged once per (JVM, dir)
-  private val tpchStatsCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // TPC-H customer/orders catalog for c19b
   private[graft] def tpchStatsStore(s: SparkSession, d: String): String =
-    tpchStatsCache.computeIfAbsent(
-      d,
-      _ => {
-        val dir = graft.TempDirs.create("graft_c19b_")
-        graft.plans.StatsPlanner.save(
-          s, dir, "customer",
-          graft.plans.StatsPlanner.analyze(Tables.customer(s, d), Seq("c_custkey")))
-        graft.plans.StatsPlanner.save(
-          s, dir, "orders",
-          graft.plans.StatsPlanner.analyze(Tables.orders(s, d), Seq("o_custkey")))
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_c19b_", d) { dir =>
+      graft.plans.StatsPlanner.save(
+        s, dir, "customer",
+        graft.plans.StatsPlanner.analyze(Tables.customer(s, d), Seq("c_custkey")))
+      graft.plans.StatsPlanner.save(
+        s, dir, "orders",
+        graft.plans.StatsPlanner.analyze(Tables.orders(s, d), Seq("o_custkey")))
+      dir
+    }
 
   /** c19b: TRANSPARENT stats-driven broadcast on a headline TPC-H join —
     * the q3-shaped customer⋈orders revenue rollup written with NO hint,
@@ -858,16 +831,9 @@ object Maintenance {
     * midpoint split) and diffs them independently; ScalaTest pins the
     * CDC invariant — applying the changelog to v1 reproduces v2.
     */
-  /** The cached two-version merge store root (test access). */
-  private[graft] def mergeStoreFor(s: SparkSession, d: String): String =
-    mergeStoreCache.computeIfAbsent(
-      d,
-      _ => buildMergeStore(s, graft.TempDirs.create("graft_c2b_"), d)
-    )
-
   def c18Changelog(s: SparkSession, d: String): DataFrame = {
     import graft.sources.SnapshotStore
-    val store = mergeStoreFor(s, d)
+    val store = mergeStore(s, d)
     val v1 = s.read
       .parquet(SnapshotStore.versionPath(store, 1))
       .select(col("user_id"), col("event_id").as("old_event"), round(col("value"), 2).as("old_value"))
@@ -888,28 +854,23 @@ object Maintenance {
   }
 
   // c16e's TYPE-ONLY events rollup (T rows — three orders of magnitude
-  // smaller than the day×type partials), staged once per (JVM, dir)
-  private val mvTypeRollupCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // smaller than the day×type partials)
   private[graft] def mvTypeRollupStore(s: SparkSession, d: String): String =
-    mvTypeRollupCache.computeIfAbsent(
-      d,
-      _ => {
-        val dir = graft.TempDirs.create("graft_c16e_")
-        Tables
-          .events(s, d)
-          .groupBy("event_type")
-          .agg(
-            count(lit(1)).as("n"),
-            sum("value").as("sv"),
-            min("value").as("mnv"),
-            max("value").as("mxv")
-          )
-          .write
-          .mode("overwrite")
-          .parquet(s"$dir/rollup")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_c16e_", d) { dir =>
+      Tables
+        .events(s, d)
+        .groupBy("event_type")
+        .agg(
+          count(lit(1)).as("n"),
+          sum("value").as("sv"),
+          min("value").as("mnv"),
+          max("value").as("mxv")
+        )
+        .write
+        .mode("overwrite")
+        .parquet(s"$dir/rollup")
+      dir
+    }
 
   /** c16e: MV SELECTION — two summaries serve the same raw table (the
     * day×type partials AND a type-only rollup) and the rule picks the
@@ -939,31 +900,26 @@ object Maintenance {
       .orderBy("event_type")
   }
 
-  // c16d's multi-measure lineitem partials, staged once per (JVM, dir)
-  private val mvLineitemCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // c16d's multi-measure lineitem partials
   private[graft] def mvLineitemStore(s: SparkSession, d: String): String =
-    mvLineitemCache.computeIfAbsent(
-      d,
-      _ => {
-        val dir = graft.TempDirs.create("graft_c16d_")
-        Tables
-          .lineitem(s, d)
-          .groupBy("l_returnflag", "l_linestatus")
-          .agg(
-            count(lit(1)).as("n"),
-            sum("l_quantity").as("sq"),
-            min("l_quantity").as("mnq"),
-            max("l_quantity").as("mxq"),
-            sum("l_extendedprice").as("sp"),
-            min("l_extendedprice").as("mnp"),
-            max("l_extendedprice").as("mxp")
-          )
-          .write
-          .mode("overwrite")
-          .parquet(s"$dir/partials")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_c16d_", d) { dir =>
+      Tables
+        .lineitem(s, d)
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(
+          count(lit(1)).as("n"),
+          sum("l_quantity").as("sq"),
+          min("l_quantity").as("mnq"),
+          max("l_quantity").as("mxq"),
+          sum("l_extendedprice").as("sp"),
+          min("l_extendedprice").as("mnp"),
+          max("l_extendedprice").as("mxp")
+        )
+        .write
+        .mode("overwrite")
+        .parquet(s"$dir/partials")
+      dir
+    }
 
   private[graft] def registerLineitemMv(s: SparkSession, d: String, dir: String): Unit =
     graft.plans.MvRegistry.registerMeasures(
@@ -1005,9 +961,9 @@ object Maintenance {
       .orderBy("l_returnflag")
   }
 
-  // c17's keyed store, staged once per (JVM, source dir): the DELETE is
-  // the operator being measured, not the store build
-  private val gdprStoreCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // c17's keyed store: a merge store of its own, since c17 deletes from it
+  private def gdprStore(s: SparkSession, d: String): String =
+    graft.TempDirs.fixture("graft_c17_", d)(buildMergeStore(s, _, d))
 
   /** c17: keyed DELETE ("right to be forgotten") over the transactional
     * store — the compliance job every retained-data pipeline owes its
@@ -1026,10 +982,7 @@ object Maintenance {
     */
   def c17GdprDelete(s: SparkSession, d: String): DataFrame = {
     import graft.sources.SnapshotStore
-    val store = gdprStoreCache.computeIfAbsent(
-      d,
-      _ => buildMergeStore(s, graft.TempDirs.create("graft_c17_"), d)
-    )
+    val store = gdprStore(s, d)
     val cur = SnapshotStore.currentVersion(store).get
     val doomed = Tables
       .events(s, d)
@@ -1275,12 +1228,12 @@ object Maintenance {
     * re-shuffling two fact tables every nightly join and paying the
     * layout cost once at ingest: the join key's co-location is a TABLE
     * property every downstream join on that key inherits. The bucketed
-    * copies are cached per (session, dir) exactly like the staged
-    * streaming inputs, so bench's second invocation measures the join,
-    * not the layout write.
+    * tables are named by the source tables' fingerprint, so a rerun over
+    * the same files measures the join, not the layout write, and a rerun
+    * over overwritten files lays them out again.
     */
   def c12BucketedJoin(s: SparkSession, d: String): DataFrame = {
-    val suffix = math.abs(scala.util.hashing.MurmurHash3.stringHash(d)).toString
+    val suffix = math.abs(scala.util.hashing.MurmurHash3.stringHash(d + graft.TempDirs.fingerprint(d))).toString
     val (tblO, tblL) = (s"graft_bkt_orders_$suffix", s"graft_bkt_lineitem_$suffix")
     this.synchronized {
       if (!s.catalog.tableExists(tblO)) {
@@ -1309,39 +1262,32 @@ object Maintenance {
       .orderBy("o_orderpriority")
   }
 
-  // landed day-partitioned events table per (JVM, source dir) — c13's
-  // fact side; cached like the streaming stagings so bench's second
-  // invocation measures the pruned join, not the layout write
-  private val landedByDayCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // landed day-partitioned events table — c13's fact side
   private def landedByDay(s: SparkSession, d: String): String =
-    landedByDayCache.computeIfAbsent(
-      d,
-      _ => {
-        val dir = graft.TempDirs.create("graft_c13_")
-        Tables
-          .events(s, d)
-          .withColumn("dt", col("ts").cast("date"))
-          .repartition(col("dt"))
-          .write
-          .partitionBy("dt")
-          .parquet(s"$dir/events")
-        // the day dimension: every day ranked by recency-inverse — the
-        // stored non-join column a runtime analysis filters on (DPP's
-        // planner requires a selective predicate on the pruning side)
-        Tables
-          .events(s, d)
-          .select(col("ts").cast("date").as("dt"))
-          .distinct()
-          .withColumn(
-            "day_rank",
-            row_number().over(org.apache.spark.sql.expressions.Window.orderBy("dt"))
-          )
-          .coalesce(1)
-          .write
-          .parquet(s"$dir/days")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_c13_", d) { dir =>
+      Tables
+        .events(s, d)
+        .withColumn("dt", col("ts").cast("date"))
+        .repartition(col("dt"))
+        .write
+        .partitionBy("dt")
+        .parquet(s"$dir/events")
+      // the day dimension: every day ranked by recency-inverse — the
+      // stored non-join column a runtime analysis filters on (DPP's
+      // planner requires a selective predicate on the pruning side)
+      Tables
+        .events(s, d)
+        .select(col("ts").cast("date").as("dt"))
+        .distinct()
+        .withColumn(
+          "day_rank",
+          row_number().over(org.apache.spark.sql.expressions.Window.orderBy("dt"))
+        )
+        .coalesce(1)
+        .write
+        .parquet(s"$dir/days")
+      dir
+    }
 
   /** c13: DYNAMIC PARTITION PRUNING over the landed day-partitioned
     * store — the runtime complement to c5's static layout story. The
@@ -1575,42 +1521,36 @@ object Maintenance {
   // c23: explicit ZONE-MAP skipping index (file-level min/max as an
   // engine-owned TABLE, not parquet footer metadata)
 
-  private val zoneMapCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Stage once per (JVM, source dir): events range-clustered by `value`
-    * into 16 files, plus the zone-map table — one row per file carrying
-    * min/max of every skip-eligible column and the row count. Built with
-    * ONE scan of the clustered copy (`input_file_name()` groupBy); the
-    * map is O(files) rows, stored as its own parquet artifact.
+  /** Events range-clustered by `value` into 16 files, plus the zone-map
+    * table — one row per file carrying min/max of every skip-eligible
+    * column and the row count. Built with ONE scan of the clustered copy
+    * (`input_file_name()` groupBy); the map is O(files) rows, stored as
+    * its own parquet artifact.
     */
   private[graft] def zoneMapStore(s: SparkSession, d: String): String =
-    zoneMapCache.computeIfAbsent(
-      d,
-      _ => {
-        val dir = graft.TempDirs.create("graft_c23_")
-        rangeLayout(
-          Tables.events(s, d).select("event_id", "user_id", "event_type", "value"),
-          s"$dir/data",
-          16,
-          Seq(col("value"), col("event_id"))
+    graft.TempDirs.fixture("graft_c23_", d) { dir =>
+      rangeLayout(
+        Tables.events(s, d).select("event_id", "user_id", "event_type", "value"),
+        s"$dir/data",
+        16,
+        Seq(col("value"), col("event_id"))
+      )
+      s.read
+        .parquet(s"$dir/data")
+        .groupBy(input_file_name().as("f"))
+        .agg(
+          min("value").as("mn_value"),
+          max("value").as("mx_value"),
+          min("user_id").as("mn_user"),
+          max("user_id").as("mx_user"),
+          count(lit(1)).as("n_rows")
         )
-        s.read
-          .parquet(s"$dir/data")
-          .groupBy(input_file_name().as("f"))
-          .agg(
-            min("value").as("mn_value"),
-            max("value").as("mx_value"),
-            min("user_id").as("mn_user"),
-            max("user_id").as("mx_user"),
-            count(lit(1)).as("n_rows")
-          )
-          .coalesce(1)
-          .write
-          .mode("overwrite")
-          .parquet(s"$dir/zonemap")
-        dir
-      }
-    )
+        .coalesce(1)
+        .write
+        .mode("overwrite")
+        .parquet(s"$dir/zonemap")
+      dir
+    }
 
   /** Files whose [min, max] value-zone overlaps [lo, hi] — the pruning
     * probe. An O(files) metadata filter; only surviving PATHS reach the
@@ -1685,7 +1625,7 @@ object Maintenance {
     */
   def c25ShallowClone(s: SparkSession, d: String): DataFrame = {
     import graft.sources.SnapshotStore
-    val src = mergeStoreFor(s, d)
+    val src = mergeStore(s, d)
     val clone = s"${graft.TempDirs.create("graft_c25c_")}/clone"
     SnapshotStore.shallowClone(src, clone)
     SnapshotStore
@@ -1717,47 +1657,41 @@ object Maintenance {
   // physical layouts — history partitioned by day, the recent half
   // re-specced to (day, hr) — behind one reader.
 
-  private val partEvoCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Stage once per (JVM, source dir): events split at the midpoint day;
-    * the old half lands under `gen1/` partitioned by `day`, the new half
-    * under `gen2/` partitioned by `(day, hr)` — the spec change a table
-    * makes when hourly dashboards arrive and daily files get too big.
+  /** Events split at the midpoint day; the old half lands under `gen1/`
+    * partitioned by `day`, the new half under `gen2/` partitioned by
+    * `(day, hr)` — the spec change a table makes when hourly dashboards
+    * arrive and daily files get too big.
     */
   private[graft] def partEvoStore(s: SparkSession, d: String): String =
-    partEvoCache.computeIfAbsent(
-      d,
-      _ => {
-        val dir = graft.TempDirs.create("graft_c24_")
-        val ev = Tables
-          .events(s, d)
-          .withColumn("day", col("ts").cast("date"))
-          .withColumn("hr", hour(col("ts")))
-        val split = ev.agg(
-          date_add(min("day"), (datediff(max("day"), min("day")) / 2).cast("int")).as("sp")
-        )
-        val tagged = ev.crossJoin(broadcast(split))
-        tagged
-          .filter(col("day") < col("sp"))
-          // gen1 predates the hourly spec: drop `hr` so the old
-          // generation genuinely lacks the evolved partition column and
-          // the read side must DERIVE it from ts (not shadow a stored
-          // copy — r9 ADVICE)
-          .drop("sp", "hr")
-          .write
-          .partitionBy("day")
-          .mode("overwrite")
-          .parquet(s"$dir/gen1")
-        tagged
-          .filter(col("day") >= col("sp"))
-          .drop("sp")
-          .write
-          .partitionBy("day", "hr")
-          .mode("overwrite")
-          .parquet(s"$dir/gen2")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_c24_", d) { dir =>
+      val ev = Tables
+        .events(s, d)
+        .withColumn("day", col("ts").cast("date"))
+        .withColumn("hr", hour(col("ts")))
+      val split = ev.agg(
+        date_add(min("day"), (datediff(max("day"), min("day")) / 2).cast("int")).as("sp")
+      )
+      val tagged = ev.crossJoin(broadcast(split))
+      tagged
+        .filter(col("day") < col("sp"))
+        // gen1 predates the hourly spec: drop `hr` so the old
+        // generation genuinely lacks the evolved partition column and
+        // the read side must DERIVE it from ts (not shadow a stored
+        // copy — r9 ADVICE)
+        .drop("sp", "hr")
+        .write
+        .partitionBy("day")
+        .mode("overwrite")
+        .parquet(s"$dir/gen1")
+      tagged
+        .filter(col("day") >= col("sp"))
+        .drop("sp")
+        .write
+        .partitionBy("day", "hr")
+        .mode("overwrite")
+        .parquet(s"$dir/gen2")
+      dir
+    }
 
   /** The evolved table behind ONE reader: both generations scanned with
     * their own partition columns and aligned by name (test access —
@@ -1890,10 +1824,7 @@ object Maintenance {
     * are keyed scans of already-laid-out versions; nothing re-sorts.
     */
   def c27VersionDiff(s: SparkSession, d: String): DataFrame = {
-    val store = mergeStoreCache.computeIfAbsent(
-      d,
-      _ => buildMergeStore(s, graft.TempDirs.create("graft_c2b_"), d)
-    )
+    val store = mergeStore(s, d)
     val v1 = graft.sources.SnapshotStore
       .readVersion(s, store, 1)
       .select(col("user_id"), col("event_id").as("old_event_id"))
@@ -1931,8 +1862,6 @@ object Maintenance {
       )
       .orderBy("dt", "bin")
   }
-
-  private val c29StoreCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Append-only day-partitioned store with three published versions:
     * v1 holds the first ⌈D/3⌉ distinct days, v2 the first ⌈2D/3⌉, v3
@@ -1974,10 +1903,8 @@ object Maintenance {
     */
   def c29IncrementalScan(s: SparkSession, d: String): DataFrame = {
     import graft.sources.SnapshotStore
-    val store = c29StoreCache.computeIfAbsent(
-      d,
-      _ => buildAppendStore(s, graft.TempDirs.create("graft_c29_"), d)
-    )
+    val store =
+      graft.TempDirs.fixture("graft_c29_", d)(buildAppendStore(s, _, d))
     def parts(v: Long): Set[String] = {
       val st = java.nio.file.Files.list(java.nio.file.Paths.get(SnapshotStore.versionPath(store, v)))
       try {
@@ -2061,10 +1988,7 @@ object Maintenance {
     * summary rather than c27's per-row ledger.
     */
   def c31WriteAmplification(s: SparkSession, d: String): DataFrame = {
-    val store = mergeStoreCache.computeIfAbsent(
-      d,
-      _ => buildMergeStore(s, graft.TempDirs.create("graft_c2b_"), d)
-    )
+    val store = mergeStore(s, d)
     val v1 = graft.sources.SnapshotStore
       .readVersion(s, store, 1)
       .select(col("user_id"), col("event_id").as("old_event_id"))
@@ -2092,10 +2016,6 @@ object Maintenance {
       )
   }
 
-  // the 4-version weekly-snapshot store c33 vacuums, built once per
-  // (JVM, source dir) so reruns (bench repeat=2) audit the SAME store
-  private val gcStoreCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** c33: SNAPSHOT EXPIRY (version GC) AUDIT — the retention half of
     * the copy-on-write story: a store accumulates one published
     * snapshot per week (per-type event counts through day 7k), then
@@ -2106,32 +2026,30 @@ object Maintenance {
     * immutable directories. Expiry is pure O(versions) metadata
     * deletes — survivors are never scanned or rewritten, the manifest
     * is untouched, and the report derives "expired" from the retention
-    * arithmetic (cur − keep), so the query is idempotent: a rerun
-    * vacuums nothing and reports identically. Time travel below the
+    * arithmetic (cur − keep), so the query is idempotent: a rerun over
+    * the same tables audits the same fixture store, vacuums nothing and
+    * reports identically. Time travel below the
     * window fails with an explicit vacuumed error (ScalaTest-pinned)
     * rather than a missing-file scan.
     */
   def c33VersionGc(s: SparkSession, d: String): DataFrame = {
     import graft.sources.SnapshotStore
-    val store = gcStoreCache.computeIfAbsent(
-      d,
-      _ => {
-        val root = graft.TempDirs.create("graft_c33_") + "/store"
-        val ev = Tables.events(s, d)
-          .select(col("event_type"), dayofmonth(col("ts")).as("dom"))
-        (1 to 4).foreach { k =>
-          ev.filter(col("dom") <= k * 7)
-            .groupBy("event_type")
-            .agg(count(lit(1)).as("n_events"))
-            .coalesce(1)
-            .write
-            .mode("overwrite")
-            .parquet(SnapshotStore.versionPath(root, k.toLong))
-          SnapshotStore.commit(root, k.toLong)
-        }
-        root
+    val store = graft.TempDirs.fixture("graft_c33_", d) { dir =>
+      val root = s"$dir/store"
+      val ev = Tables.events(s, d)
+        .select(col("event_type"), dayofmonth(col("ts")).as("dom"))
+      (1 to 4).foreach { k =>
+        ev.filter(col("dom") <= k * 7)
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n_events"))
+          .coalesce(1)
+          .write
+          .mode("overwrite")
+          .parquet(SnapshotStore.versionPath(root, k.toLong))
+        SnapshotStore.commit(root, k.toLong)
       }
-    )
+      root
+    }
     val keep = 2
     SnapshotStore.vacuum(store, keep)
     val cur = SnapshotStore.currentVersion(store).get
@@ -2159,9 +2077,6 @@ object Maintenance {
     kept.reduce(_.unionByName(_)).unionByName(expired).orderBy("version")
   }
 
-  // c35's base-files + deletion-vector store, built once per (JVM, dir)
-  private val morStoreCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** c35: MERGE-ON-READ DELETES (deletion vectors) — the other half of
     * the delete story next to c17's copy-on-write GDPR purge: the base
     * files are written ONCE and never touched again; each delete
@@ -2178,38 +2093,7 @@ object Maintenance {
     * unchanged across both delete generations).
     */
   def c35MergeOnRead(s: SparkSession, d: String): DataFrame = {
-    val root = morStoreCache.computeIfAbsent(
-      d,
-      _ => {
-        val r = graft.TempDirs.create("graft_c35_")
-        Tables
-          .events(s, d)
-          .select("event_id", "user_id", "event_type", "value")
-          .coalesce(4)
-          .write
-          .mode("overwrite")
-          .parquet(s"$r/base")
-        // delete generation 1: a user cohort (the GDPR shape)
-        Tables
-          .events(s, d)
-          .filter(col("user_id") % 7 === 3)
-          .select("event_id")
-          .coalesce(1)
-          .write
-          .mode("overwrite")
-          .parquet(s"$r/dv/v=1")
-        // delete generation 2: retract one event type wholesale
-        Tables
-          .events(s, d)
-          .filter(col("event_type") === "error")
-          .select("event_id")
-          .coalesce(1)
-          .write
-          .mode("overwrite")
-          .parquet(s"$r/dv/v=2")
-        r
-      }
-    )
+    val root = morStore(s, d)
     val base = s.read.parquet(s"$root/base")
     val dv = s.read.parquet(s"$root/dv") // both generations via partition discovery
     base
@@ -2219,12 +2103,43 @@ object Maintenance {
       .orderBy("event_type")
   }
 
+  // c35's base-files + deletion-vector store
+  private def morStore(s: SparkSession, d: String): String =
+    graft.TempDirs.fixture("graft_c35_", d) { r =>
+      Tables
+        .events(s, d)
+        .select("event_id", "user_id", "event_type", "value")
+        .coalesce(4)
+        .write
+        .mode("overwrite")
+        .parquet(s"$r/base")
+      // delete generation 1: a user cohort (the GDPR shape)
+      Tables
+        .events(s, d)
+        .filter(col("user_id") % 7 === 3)
+        .select("event_id")
+        .coalesce(1)
+        .write
+        .mode("overwrite")
+        .parquet(s"$r/dv/v=1")
+      // delete generation 2: retract one event type wholesale
+      Tables
+        .events(s, d)
+        .filter(col("event_type") === "error")
+        .select("event_id")
+        .coalesce(1)
+        .write
+        .mode("overwrite")
+        .parquet(s"$r/dv/v=2")
+      r
+    }
+
   /** Base-file inventory for the c35 store (test access: the MOR
     * contract is that deletes never touch base files).
     */
   private[graft] def c35BaseInventory(s: SparkSession, d: String): Seq[(String, Long)] = {
-    c35MergeOnRead(s, d).count() // ensure the store exists
-    val dir = new java.io.File(s"${morStoreCache.get(d)}/base")
+    c35MergeOnRead(s, d).count() // a read must leave the base files as they were
+    val dir = new java.io.File(s"${morStore(s, d)}/base")
     dir
       .listFiles()
       .filter(_.getName.endsWith(".parquet"))
@@ -2348,8 +2263,7 @@ object Maintenance {
     * versions and the compacted bytes equalling live-state bytes.
     */
   def c37CompactIndex(s: SparkSession, d: String): DataFrame = {
-    graft.operators.StreamingBatch.s22StreamCurate(s, d).count() // land the incremental index
-    val store = graft.operators.StreamingBatch.s22LastStore.get(d)
+    val store = graft.operators.StreamingBatch.s22CurateIndex(s, d) // land the incremental index
     val bss = graft.sources.BucketedStateStore
     val compactId = bss.manifestIds(store).max + 1L
     bss.compact(s, store, compactId, Seq("fp"), numBuckets = 16)

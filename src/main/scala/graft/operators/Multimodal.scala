@@ -193,10 +193,6 @@ object Multimodal {
   // itself (not a fake) is driver-gated.
   // ------------------------------------------------------------------
 
-  // staged once per (JVM, source dir): the PNG encode is the fixture
-  // build, the timed queries measure decode + downstream
-  private val mediaStoreCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Encode a w×h 8-bit grayscale PNG with `px(i)` at row-major index i.
     * PNG is lossless, so every sample round-trips exactly through
     * [[javax.imageio.ImageIO]].
@@ -469,9 +465,9 @@ object Multimodal {
     encodeGif(Array.tabulate(n)(i => ((id * 31 + i.toLong * i * 7919) % 256).toInt))
   }
 
-  /** Stage genuine PNG + WAV payloads for every document, once per (JVM,
-    * source dir). Encoding happens on EXECUTORS (mapPartitions over the
-    * doc ids) — the driver never holds media bytes.
+  /** Stage genuine PNG + WAV payloads for every document. Encoding
+    * happens on EXECUTORS (mapPartitions over the doc ids) — the driver
+    * never holds media bytes.
     *
     * Round 18 (optimization guide §2.6/§6): the store is written as MANY
     * files, not whatever the documents scan's task count happens to be.
@@ -489,31 +485,27 @@ object Multimodal {
     * and the r18 measurement note — 4× was measured and rejected).
     */
   def mediaStore(s: SparkSession, d: String): String =
-    mediaStoreCache.computeIfAbsent(
-      d,
-      _ => {
-        import s.implicits._
-        val dir = graft.TempDirs.create("graft_media_")
-        val ids = Tables.documents(s, d).select(col("doc_id")).as[Long]
-        // exactly one file per core: enough splits for full decode
-        // parallelism, few enough that the per-execution footer reads
-        // (every consumer re-plans the scan each run) stay negligible —
-        // 128 files measured +0.3-0.4 s of footer/listing overhead on
-        // the SMALL wav queries (m9 0.30→0.70 s) for no extra speedup
-        val nFiles = math.max(
-          1,
-          math.min(s.sparkContext.defaultParallelism, (ids.count() / 32L + 1L).toInt)
-        )
-        ids
-          .repartition(nFiles)
-          .mapPartitions(it => it.map(id => (id, pngMeta(id), pngGroup(id), wavMeta(id), gifMeta(id))))
-          .toDF("doc_id", "png_meta", "png_grp", "wav_meta", "gif_meta")
-          .write
-          .mode("overwrite")
-          .parquet(s"$dir/media")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_media_", d) { dir =>
+      import s.implicits._
+      val ids = Tables.documents(s, d).select(col("doc_id")).as[Long]
+      // exactly one file per core: enough splits for full decode
+      // parallelism, few enough that the per-execution footer reads
+      // (every consumer re-plans the scan each run) stay negligible —
+      // 128 files measured +0.3-0.4 s of footer/listing overhead on
+      // the SMALL wav queries (m9 0.30→0.70 s) for no extra speedup
+      val nFiles = math.max(
+        1,
+        math.min(s.sparkContext.defaultParallelism, (ids.count() / 32L + 1L).toInt)
+      )
+      ids
+        .repartition(nFiles)
+        .mapPartitions(it => it.map(id => (id, pngMeta(id), pngGroup(id), wavMeta(id), gifMeta(id))))
+        .toDF("doc_id", "png_meta", "png_grp", "wav_meta", "gif_meta")
+        .write
+        .mode("overwrite")
+        .parquet(s"$dir/media")
+      dir
+    }
 
   /** Bench hook: build the media store untimed so the timed m7/m8
     * entries measure decode, not the one-time PNG staging.

@@ -26,28 +26,6 @@ object StreamingBatch {
     )
   )
 
-  /** Stage the events table as JSON-lines (the wire format a khose-style
-    * pipeline consumes). Cached per (JVM, source dir): s1/s2 both consume
-    * the same staged stream input, and Bench re-invokes each query —
-    * restaging identical input would only measure the JSON writer.
-    * Timestamps are serialized at MICROSECOND precision (`toJSON`'s
-    * default format truncates to ms, which shifted stream-side event
-    * times off the oracle's µs instants); Spark's JSON reader parses the
-    * 6-digit fraction via its ISO fallback without an explicit format.
-    */
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Final stateful-operator row counts per harness, captured from the
-    * last StreamingQueryProgress after each AvailableNow run. The design
-    * notes claim watermark eviction keeps state bounded; these let
-    * ScalaTests pin that claim to measured rows instead of prose.
-    */
-  private[graft] val lastStateRows = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-  private def recordStateRows(name: String, q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    Option(q.lastProgress).foreach { p =>
-      lastStateRows.put(name, p.stateOperators.map(_.numRowsTotal).sum)
-    }
-
   /** Run a STATEFUL streaming harness with a right-sized state partition
     * count. Spark pins the state partition count into the checkpoint at
     * first start (read from `spark.sql.shuffle.partitions`), and every
@@ -71,42 +49,36 @@ object StreamingBatch {
 
   /** s9's staged input: the events stream split at its time midpoint into
     * two JSON files (half 2 carries the watermark sentinel) — the
-    * "pipeline went down mid-stream" scenario. Pure function of the
-    * source table, cached like the other staged inputs.
+    * "pipeline went down mid-stream" scenario.
     */
   private def s9Halves(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#halves",
-      _ => {
-        val hdir = graft.TempDirs.create("graft_s9_halves_")
-        val ev = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
-        val bounds = ev.agg(min(unix_micros(col("ts"))).as("mn"), max(unix_micros(col("ts"))).as("mx"))
-        val halved = ev
-          .crossJoin(broadcast(bounds))
-          .withColumn("is_late", unix_micros(col("ts")) >= (col("mn") + col("mx")) / 2)
-          .drop("mn", "mx")
-        toJsonMicros(halved.filter(!col("is_late")).drop("is_late"))
-          .coalesce(1).write.mode("overwrite").text(s"$hdir/h1")
-        val sentinel = ev
-          .agg(max(col("ts")).as("ts0"))
-          .select(
-            lit(-1L).as("event_id"),
-            (col("ts0") + expr("interval 24 hours")).as("ts"),
-            lit(-1L).as("user_id"),
-            lit("__sentinel__").as("event_type"),
-            lit(0.0).as("value"),
-            lit("{}").as("props")
-          )
-        toJsonMicros(halved.filter(col("is_late")).drop("is_late").unionByName(sentinel))
-          .coalesce(1).write.mode("overwrite").text(s"$hdir/h2")
-        hdir
-      }
-    )
+    graft.TempDirs.fixture("graft_s9_halves_", d) { hdir =>
+      val ev = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
+      val bounds = ev.agg(min(unix_micros(col("ts"))).as("mn"), max(unix_micros(col("ts"))).as("mx"))
+      val halved = ev
+        .crossJoin(broadcast(bounds))
+        .withColumn("is_late", unix_micros(col("ts")) >= (col("mn") + col("mx")) / 2)
+        .drop("mn", "mx")
+      toJsonMicros(halved.filter(!col("is_late")).drop("is_late"))
+        .coalesce(1).write.mode("overwrite").text(s"$hdir/h1")
+      val sentinel = ev
+        .agg(max(col("ts")).as("ts0"))
+        .select(
+          lit(-1L).as("event_id"),
+          (col("ts0") + expr("interval 24 hours")).as("ts"),
+          lit(-1L).as("user_id"),
+          lit("__sentinel__").as("event_type"),
+          lit(0.0).as("value"),
+          lit("{}").as("props")
+        )
+      toJsonMicros(halved.filter(col("is_late")).drop("is_late").unionByName(sentinel))
+        .coalesce(1).write.mode("overwrite").text(s"$hdir/h2")
+      hdir
+    }
 
-  /** Stage every streaming harness input for `d` (idempotent; cached per
-    * JVM). Bench calls this untimed so the timed streaming queries
-    * measure their pipelines, not whichever query happens to write the
-    * shared staged input first.
+  /** Stage every streaming harness input for `d`. Bench calls this
+    * untimed so the timed streaming queries measure their pipelines, not
+    * whichever query happens to write the shared staged input first.
     */
   def prestage(s: SparkSession, d: String): Unit = {
     stageJson(s, d)
@@ -133,15 +105,19 @@ object StreamingBatch {
         Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
       ).as("value")
     )
+
+  /** Stage the events table as JSON-lines (the wire format a khose-style
+    * pipeline consumes); s1/s2 both consume it. Timestamps are serialized
+    * at MICROSECOND precision (`toJSON`'s default format truncates to ms,
+    * which shifted stream-side event times off the oracle's µs instants);
+    * Spark's JSON reader parses the 6-digit fraction via its ISO fallback
+    * without an explicit format.
+    */
   private def stageJson(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d,
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_")
-        toJsonMicros(Tables.events(s, d)).coalesce(4).write.mode("overwrite").text(s"$dir/json")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_stream_", d) { dir =>
+      toJsonMicros(Tables.events(s, d)).coalesce(4).write.mode("overwrite").text(s"$dir/json")
+      dir
+    }
 
   /** s2's staging variant: the events stream plus ONE far-future sentinel
     * record (event_type `__sentinel__`, ts = max(ts) + 24h, built as a
@@ -152,25 +128,21 @@ object StreamingBatch {
     * of the sink.
     */
   private def stageJsonSentinel(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#sentinel",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_sent_")
-        val ev = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
-        val sentinel = ev
-          .agg(max(col("ts")).as("ts0"))
-          .select(
-            lit(-1L).as("event_id"),
-            (col("ts0") + expr("interval 24 hours")).as("ts"),
-            lit(-1L).as("user_id"),
-            lit("__sentinel__").as("event_type"),
-            lit(0.0).as("value"),
-            lit("{}").as("props")
-          )
-        toJsonMicros(ev.unionByName(sentinel)).coalesce(4).write.mode("overwrite").text(s"$dir/json")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_stream_sent_", d) { dir =>
+      val ev = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
+      val sentinel = ev
+        .agg(max(col("ts")).as("ts0"))
+        .select(
+          lit(-1L).as("event_id"),
+          (col("ts0") + expr("interval 24 hours")).as("ts"),
+          lit(-1L).as("user_id"),
+          lit("__sentinel__").as("event_type"),
+          lit(0.0).as("value"),
+          lit("{}").as("props")
+        )
+      toJsonMicros(ev.unionByName(sentinel)).coalesce(4).write.mode("overwrite").text(s"$dir/json")
+      dir
+    }
 
   /** s1: JSON-lines → StreamIngest → time-partitioned parquet → re-read
     * and aggregate per partition. Exercises parse, corrupt-handling,
@@ -269,7 +241,6 @@ object StreamingBatch {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    recordStateRows("s4", q)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id").orderBy("start_s")
     s.read
       .parquet(s"$out/data")
@@ -288,27 +259,23 @@ object StreamingBatch {
     * cannot match each other, and user −1 is filtered on re-read.
     */
   private def stageJsonSentinelBoth(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#sentinel2",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_sent2_")
-        val ev = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
-        def sentinel(off: String, tpe: String, id: Long) = ev
-          .agg(max(col("ts")).as("ts0"))
-          .select(
-            lit(id).as("event_id"),
-            (col("ts0") + expr(s"interval $off")).as("ts"),
-            lit(-1L).as("user_id"),
-            lit(tpe).as("event_type"),
-            lit(0.0).as("value"),
-            lit("{}").as("props")
-          )
-        toJsonMicros(
-          ev.unionByName(sentinel("24 hours", "purchase", -1L)).unionByName(sentinel("26 hours", "click", -2L))
-        ).coalesce(4).write.mode("overwrite").text(s"$dir/json")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_stream_sent2_", d) { dir =>
+      val ev = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
+      def sentinel(off: String, tpe: String, id: Long) = ev
+        .agg(max(col("ts")).as("ts0"))
+        .select(
+          lit(id).as("event_id"),
+          (col("ts0") + expr(s"interval $off")).as("ts"),
+          lit(-1L).as("user_id"),
+          lit(tpe).as("event_type"),
+          lit(0.0).as("value"),
+          lit("{}").as("props")
+        )
+      toJsonMicros(
+        ev.unionByName(sentinel("24 hours", "purchase", -1L)).unionByName(sentinel("26 hours", "click", -2L))
+      ).coalesce(4).write.mode("overwrite").text(s"$dir/json")
+      dir
+    }
 
   /** s8 (oracle form): LEFT OUTER watermarked stream-stream join — the
     * hard streaming case: matched rows emit in-batch, UNMATCHED
@@ -366,15 +333,11 @@ object StreamingBatch {
     * shape a khose-style consumer actually sees from a broker replay).
     */
   private def stageJsonDuplicated(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#dup",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_dup_")
-        val ev = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
-        toJsonMicros(ev.unionByName(ev)).coalesce(4).write.mode("overwrite").text(s"$dir/json")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_stream_dup_", d) { dir =>
+      val ev = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
+      toJsonMicros(ev.unionByName(ev)).coalesce(4).write.mode("overwrite").text(s"$dir/json")
+      dir
+    }
 
   /** s3 (oracle form): streaming exact dedup over DUPLICATED input —
     * dropDuplicatesWithinWatermark on the event key. The landed data must
@@ -531,50 +494,46 @@ object StreamingBatch {
     * contract the streaming as-of's O(1) state requires.
     */
   private def stageJsonTsOrdered(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#tsorder",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_tso_")
-        val ev =
-          Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
-        val bounds = ev.agg(
-          unix_micros(min("ts")).as("mn"),
-          (unix_micros(max("ts")) + 1).as("mxp1")
+    graft.TempDirs.fixture("graft_stream_tso_", d) { dir =>
+      val ev =
+        Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
+      val bounds = ev.agg(
+        unix_micros(min("ts")).as("mn"),
+        (unix_micros(max("ts")) + 1).as("mxp1")
+      )
+      ev.crossJoin(broadcast(bounds))
+        .withColumn(
+          "arr",
+          floor((unix_micros(col("ts")) - col("mn")) * 4 / (col("mxp1") - col("mn"))).cast("int")
         )
-        ev.crossJoin(broadcast(bounds))
-          .withColumn(
-            "arr",
-            floor((unix_micros(col("ts")) - col("mn")) * 4 / (col("mxp1") - col("mn"))).cast("int")
-          )
-          .select(
-            to_json(
-              struct(eventSchema.fieldNames.map(col).toIndexedSeq: _*),
-              Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-            ).as("value"),
-            col("arr")
-          )
-          .repartition(1)
-          .write
-          .partitionBy("arr")
-          .mode("overwrite")
-          .text(s"$dir/stage")
-        val stageDir = new java.io.File(s"$dir/stage")
-        val jsonDir = new java.io.File(s"$dir/json"); jsonDir.mkdirs()
-        val base = System.currentTimeMillis() - 1000000L
-        stageDir
-          .listFiles()
-          .filter(f => f.isDirectory && f.getName.startsWith("arr="))
-          .sortBy(_.getName.stripPrefix("arr=").toInt)
-          .zipWithIndex
-          .foreach { case (sub, i) =>
-            val part = sub.listFiles().filter(_.getName.startsWith("part-")).head
-            val dst = new java.io.File(jsonDir, f"batch_$i%04d.json")
-            java.nio.file.Files.move(part.toPath, dst.toPath)
-            dst.setLastModified(base + i * 60000L)
-          }
-        dir
-      }
-    )
+        .select(
+          to_json(
+            struct(eventSchema.fieldNames.map(col).toIndexedSeq: _*),
+            Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
+          ).as("value"),
+          col("arr")
+        )
+        .repartition(1)
+        .write
+        .partitionBy("arr")
+        .mode("overwrite")
+        .text(s"$dir/stage")
+      val stageDir = new java.io.File(s"$dir/stage")
+      val jsonDir = new java.io.File(s"$dir/json"); jsonDir.mkdirs()
+      val base = System.currentTimeMillis() - 1000000L
+      stageDir
+        .listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("arr="))
+        .sortBy(_.getName.stripPrefix("arr=").toInt)
+        .zipWithIndex
+        .foreach { case (sub, i) =>
+          val part = sub.listFiles().filter(_.getName.startsWith("part-")).head
+          val dst = new java.io.File(jsonDir, f"batch_$i%04d.json")
+          java.nio.file.Files.move(part.toPath, dst.toPath)
+          dst.setLastModified(base + i * 60000L)
+        }
+      dir
+    }
 
   /** s25: STREAMING AS-OF JOIN — the third implementation of e7's
     * semantics (after the window composition and the native
@@ -671,74 +630,70 @@ object StreamingBatch {
     * sentinel half established.
     */
   private[graft] def stageJsonBandSwapped(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#bandswap",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_bsw_")
-        val ev =
-          Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
-        val Array(mnUs, mxUs) = ev
-          .agg(unix_micros(min("ts")), unix_micros(max("ts")))
-          .collect()(0) match { case r => Array(r.getLong(0), r.getLong(1)) }
-        val bandUs = (mxUs - mnUs) / 8 + 1
-        val delayMs = 2L * (bandUs / 1000 + 1) + 2000
-        val banded = ev
-          .withColumn("band", ((unix_micros(col("ts")) - lit(mnUs)) / lit(bandUs)).cast("int"))
-          // pair swap: 0↔1, 2↔3, … — newer band of each pair delivered first
-          .withColumn("arr", expr("band - band % 2 + (1 - band % 2)"))
-        // one file per arrival slot, rows inside hash-shuffled
-        banded
-          .select(
-            to_json(
-              struct(eventSchema.fieldNames.map(col).toIndexedSeq: _*),
-              Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-            ).as("value"),
-            col("arr"),
-            md5(col("event_id").cast("string")).as("shuf")
-          )
-          .repartition(1)
-          .sortWithinPartitions("arr", "shuf")
-          .select("value", "arr")
-          .write
-          .partitionBy("arr")
-          .mode("overwrite")
-          .text(s"$dir/stage")
-        // sentinels: ts chosen so neither can ever itself pass the final
-        // watermark (delay ≥ 1ms ⇒ sentinel1_ms ≥ final_wm), so even
-        // unfiltered they could never emit
-        val s1Us = mxUs + delayMs * 1000 + 60000000L
-        val s2Us = s1Us + 1000L
-        def sentinelJson(us: Long): String = {
-          val iso = java.time.Instant.EPOCH.plusNanos(us * 1000).toString.stripSuffix("Z")
-          val tsStr = if (iso.contains(".")) iso + "Z" else iso + ".000000Z"
-          s"""{"event_id":-1,"ts":"$tsStr","user_id":-1,"event_type":"__flush__","value":null,"props":"{}"}"""
-        }
-        val stageDir = new java.io.File(s"$dir/stage")
-        val jsonDir = new java.io.File(s"$dir/json"); jsonDir.mkdirs()
-        val base = System.currentTimeMillis() - 1000000L
-        val bandFiles = stageDir
-          .listFiles()
-          .filter(f => f.isDirectory && f.getName.startsWith("arr="))
-          .sortBy(_.getName.stripPrefix("arr=").toInt)
-        bandFiles.zipWithIndex.foreach { case (sub, i) =>
-          val part = sub.listFiles().filter(_.getName.startsWith("part-")).head
-          val dst = new java.io.File(jsonDir, f"batch_$i%04d.json")
-          java.nio.file.Files.move(part.toPath, dst.toPath)
-          dst.setLastModified(base + i * 60000L)
-        }
-        val n = bandFiles.length
-        Seq(s1Us, s2Us).zipWithIndex.foreach { case (us, i) =>
-          val dst = new java.io.File(jsonDir, f"batch_${n + i}%04d.json")
-          java.nio.file.Files.writeString(dst.toPath, sentinelJson(us) + "\n")
-          dst.setLastModified(base + (n + i) * 60000L)
-        }
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$dir/delay_ms.txt"),
-          delayMs.toString
+    graft.TempDirs.fixture("graft_stream_bsw_", d) { dir =>
+      val ev =
+        Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
+      val Array(mnUs, mxUs) = ev
+        .agg(unix_micros(min("ts")), unix_micros(max("ts")))
+        .collect()(0) match { case r => Array(r.getLong(0), r.getLong(1)) }
+      val bandUs = (mxUs - mnUs) / 8 + 1
+      val delayMs = 2L * (bandUs / 1000 + 1) + 2000
+      val banded = ev
+        .withColumn("band", ((unix_micros(col("ts")) - lit(mnUs)) / lit(bandUs)).cast("int"))
+        // pair swap: 0↔1, 2↔3, … — newer band of each pair delivered first
+        .withColumn("arr", expr("band - band % 2 + (1 - band % 2)"))
+      // one file per arrival slot, rows inside hash-shuffled
+      banded
+        .select(
+          to_json(
+            struct(eventSchema.fieldNames.map(col).toIndexedSeq: _*),
+            Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
+          ).as("value"),
+          col("arr"),
+          md5(col("event_id").cast("string")).as("shuf")
         )
-        dir
+        .repartition(1)
+        .sortWithinPartitions("arr", "shuf")
+        .select("value", "arr")
+        .write
+        .partitionBy("arr")
+        .mode("overwrite")
+        .text(s"$dir/stage")
+      // sentinels: ts chosen so neither can ever itself pass the final
+      // watermark (delay ≥ 1ms ⇒ sentinel1_ms ≥ final_wm), so even
+      // unfiltered they could never emit
+      val s1Us = mxUs + delayMs * 1000 + 60000000L
+      val s2Us = s1Us + 1000L
+      def sentinelJson(us: Long): String = {
+        val iso = java.time.Instant.EPOCH.plusNanos(us * 1000).toString.stripSuffix("Z")
+        val tsStr = if (iso.contains(".")) iso + "Z" else iso + ".000000Z"
+        s"""{"event_id":-1,"ts":"$tsStr","user_id":-1,"event_type":"__flush__","value":null,"props":"{}"}"""
       }
-    )
+      val stageDir = new java.io.File(s"$dir/stage")
+      val jsonDir = new java.io.File(s"$dir/json"); jsonDir.mkdirs()
+      val base = System.currentTimeMillis() - 1000000L
+      val bandFiles = stageDir
+        .listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("arr="))
+        .sortBy(_.getName.stripPrefix("arr=").toInt)
+      bandFiles.zipWithIndex.foreach { case (sub, i) =>
+        val part = sub.listFiles().filter(_.getName.startsWith("part-")).head
+        val dst = new java.io.File(jsonDir, f"batch_$i%04d.json")
+        java.nio.file.Files.move(part.toPath, dst.toPath)
+        dst.setLastModified(base + i * 60000L)
+      }
+      val n = bandFiles.length
+      Seq(s1Us, s2Us).zipWithIndex.foreach { case (us, i) =>
+        val dst = new java.io.File(jsonDir, f"batch_${n + i}%04d.json")
+        java.nio.file.Files.writeString(dst.toPath, sentinelJson(us) + "\n")
+        dst.setLastModified(base + (n + i) * 60000L)
+      }
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$dir/delay_ms.txt"),
+        delayMs.toString
+      )
+      dir
+    }
 
   /** s42 (round 18): STREAMING LOCF UNDER OUT-OF-ORDER ARRIVAL — the
     * production guarantee the s41/s25 staging contract only documented.
@@ -782,7 +737,6 @@ object StreamingBatch {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    recordStateRows("s42", q)
     s.read
       .parquet(s"$out/data")
       .select("event_id", "user_id", "us", "v_obs", "locf")
@@ -820,7 +774,6 @@ object StreamingBatch {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    recordStateRows("s45", q)
     s.read
       .parquet(s"$out/data")
       .select("event_id", "event_type", "cents", "n_win", "p95_cents")
@@ -860,7 +813,6 @@ object StreamingBatch {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      recordStateRows("s46", q)
       s.read
         .parquet(s"$out/data")
         .select("event_id", "event_type", "cents", "n_win", "p95_cents")
@@ -919,7 +871,6 @@ object StreamingBatch {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      recordStateRows("s44", q)
       s.read
         .parquet(s"$out/data")
         .select("event_id", "user_id", "us", "v_obs", "locf")
@@ -975,7 +926,6 @@ object StreamingBatch {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    recordStateRows("s43", q)
     s.read
       .parquet(s"$out/data")
       .select("p_event_id", "user_id", "click_event_id", "gap_us")
@@ -990,17 +940,13 @@ object StreamingBatch {
     * store" merge ends with the OLDEST state.
     */
   private def stageJsonReversed(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#reversed",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_rev_")
-        toJsonMicros(Tables.events(s, d).repartitionByRange(4, col("ts").desc, col("event_id").desc))
-          .write
-          .mode("overwrite")
-          .text(s"$dir/json")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_stream_rev_", d) { dir =>
+      toJsonMicros(Tables.events(s, d).repartitionByRange(4, col("ts").desc, col("event_id").desc))
+        .write
+        .mode("overwrite")
+        .text(s"$dir/json")
+      dir
+    }
 
   /** s23: streaming CDC APPLY — tombstones + sequence discipline under
     * out-of-order delivery. The changelog interprets every event as an
@@ -1023,7 +969,22 @@ object StreamingBatch {
     * (vacuum after max-lateness) bound the store exactly like c7's
     * retention pass.
     */
-  def s23StreamCdc(s: SparkSession, d: String): DataFrame = {
+  def s23StreamCdc(s: SparkSession, d: String): DataFrame = s23Snapshot(s, s23CdcFold(s, d))
+
+  /** s23's snapshot read over the CDC store at `store`. */
+  private[graft] def s23Snapshot(s: SparkSession, store: String): DataFrame =
+    graft.sources.BucketedStateStore
+      .readLatest(s, store)
+      .get
+      .filter(col("op") =!= "D")
+      .select(col("user_id"), col("event_id"), col("event_type"), round(col("value"), 2).as("value"))
+      .orderBy("user_id")
+
+  /** s23's fold: streams the reversed events into a fresh bucketed CDC
+    * store and returns the store's path. The store RETAINS the
+    * tombstones [[s23StreamCdc]]'s snapshot read drops.
+    */
+  private[graft] def s23CdcFold(s: SparkSession, d: String): String = {
     val dir = stageJsonReversed(s, d)
     val stream = StreamIngest
       .parsed(
@@ -1059,24 +1020,8 @@ object StreamingBatch {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s23LastStore.put(d, store)
-    graft.sources.BucketedStateStore
-      .readLatest(s, store)
-      .get
-      .filter(col("op") =!= "D")
-      .select(col("user_id"), col("event_id"), col("event_type"), round(col("value"), 2).as("value"))
-      .orderBy("user_id")
+    store
   }
-
-  /** Final store path of the last [[s23StreamCdc]] run per source dir
-    * (test access: the store must RETAIN tombstones the snapshot drops).
-    */
-  private[graft] val s23LastStore = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Root of the last [[s38StreamAttrition]] run per source dir (audit
-    * access: [[graft.StateAudit]] reads its per-batch write ledger).
-    */
-  private[graft] val s38LastRoot = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** s7 (oracle form): NATIVE streaming session aggregation — the
     * built-in `session_window` under a watermark (Spark's merging
@@ -1105,7 +1050,6 @@ object StreamingBatch {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    recordStateRows("s7", q)
     s.read
       .parquet(s"$out/data")
       .filter(col("user_id") >= 0) // sentinel session (if flushed) excluded
@@ -1134,9 +1078,8 @@ object StreamingBatch {
     import s.implicits._
     val root = graft.TempDirs.create("graft_s9_")
     new java.io.File(s"$root/in").mkdirs()
-    // the two halves are pure functions of the source table — stage them
-    // once per (JVM, dir) like the other harness inputs; only the
-    // checkpoint/sink/in dirs are per-run (the restart is what's measured)
+    // the two halves are a fixture; only the checkpoint/sink/in dirs are
+    // per-run (the restart is what's measured)
     val halves = s9Halves(s, d)
     def copyIn(from: String, name: String): Unit =
       java.nio.file.Files.copy(
@@ -1264,29 +1207,25 @@ object StreamingBatch {
       .orderBy("nation")
   }
 
-  /** Staged documents as JSON lines (cached per dir like the event
-    * stagings) — the corpus as a stream, for the online-dedup harness.
+  /** Staged documents as JSON lines — the corpus as a stream, for the
+    * online-dedup harness.
     */
   private def stageDocsJson(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#docs",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_docs_")
-        // repartition, not coalesce: a 1-partition source parquet would
-        // otherwise stage ONE file and the maxFilesPerTrigger=1 streams
-        // would degenerate to a single batch (the folds are
-        // order-independent, so batch count never changes results —
-        // only how much cross-batch machinery the run exercises)
-        Tables
-          .documents(s, d)
-          .select(to_json(struct(col("doc_id"), col("text"))).as("value"))
-          .repartition(4)
-          .write
-          .mode("overwrite")
-          .text(s"$dir/json")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_stream_docs_", d) { dir =>
+      // repartition, not coalesce: a 1-partition source parquet would
+      // otherwise stage ONE file and the maxFilesPerTrigger=1 streams
+      // would degenerate to a single batch (the folds are
+      // order-independent, so batch count never changes results —
+      // only how much cross-batch machinery the run exercises)
+      Tables
+        .documents(s, d)
+        .select(to_json(struct(col("doc_id"), col("text"))).as("value"))
+        .repartition(4)
+        .write
+        .mode("overwrite")
+        .text(s"$dir/json")
+      dir
+    }
 
   /** Docs staged TWICE across many files (s3's duplicated-stage pattern,
     * applied to documents): the corpus has no exact duplicates of its
@@ -1540,23 +1479,19 @@ object StreamingBatch {
     * landed rows.
     */
   private def stageFrontierDocsJson(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#frontier",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_frontier_")
-        val docs = Tables.documents(s, d)
-        val cut = docs.agg(floor((max("doc_id") + lit(1)).cast("double") / 2).cast("long").as("cut"))
-        docs
-          .crossJoin(broadcast(cut))
-          .filter(col("doc_id") >= col("cut"))
-          .select(to_json(struct(col("doc_id"), col("text"))).as("value"))
-          .coalesce(4)
-          .write
-          .mode("overwrite")
-          .text(s"$dir/json")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_stream_frontier_", d) { dir =>
+      val docs = Tables.documents(s, d)
+      val cut = docs.agg(floor((max("doc_id") + lit(1)).cast("double") / 2).cast("long").as("cut"))
+      docs
+        .crossJoin(broadcast(cut))
+        .filter(col("doc_id") >= col("cut"))
+        .select(to_json(struct(col("doc_id"), col("text"))).as("value"))
+        .coalesce(4)
+        .write
+        .mode("overwrite")
+        .text(s"$dir/json")
+      dir
+    }
 
   /** s27: STREAMING NOVELTY SCORING — t32's trigram-novelty metric run
     * as the arriving half of an ingest pipeline: frontier documents
@@ -1613,20 +1548,16 @@ object StreamingBatch {
   }
 
   private def stageDocsJsonDuplicated(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#docsdup",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_docsdup_")
-        val docs = Tables.documents(s, d).select(to_json(struct(col("doc_id"), col("text"))).as("value"))
-        docs
-          .unionByName(docs)
-          .coalesce(8)
-          .write
-          .mode("overwrite")
-          .text(s"$dir/json")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_stream_docsdup_", d) { dir =>
+      val docs = Tables.documents(s, d).select(to_json(struct(col("doc_id"), col("text"))).as("value"))
+      docs
+        .unionByName(docs)
+        .coalesce(8)
+        .write
+        .mode("overwrite")
+        .text(s"$dir/json")
+      dir
+    }
 
   /** s13: ONLINE near-dup index maintenance — d2's MinHash-LSH dedup run
     * as a stream. Each micro-batch of documents (1) shingles + minhash-
@@ -1812,7 +1743,6 @@ object StreamingBatch {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    recordStateRows("s11", q)
     s.read
       .parquet(s"$out/data")
       .select(unix_timestamp(col("bucket_start")).as("bucket_s"), col("uniques"))
@@ -1823,55 +1753,46 @@ object StreamingBatch {
     * — `props` holds JSON with embedded commas/quotes, so naive
     * concat_ws would corrupt the wire). Timestamps serialize with the
     * shared µs format so stream-side event times land on the oracle's
-    * instants. Cached per (JVM, source dir) like the JSON stage.
+    * instants.
     */
   private def stageCsv(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#csv",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_csv_")
-        Tables
-          .events(s, d)
-          .select(
-            to_csv(
-              struct(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"), col("props")),
-              java.util.Collections.singletonMap("timestampFormat", StreamIngest.csvTsFormat)
-            ).as("value")
-          )
-          .coalesce(4)
-          .write
-          .mode("overwrite")
-          .text(s"$dir/csv")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_stream_csv_", d) { dir =>
+      Tables
+        .events(s, d)
+        .select(
+          to_csv(
+            struct(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"), col("props")),
+            java.util.Collections.singletonMap("timestampFormat", StreamIngest.csvTsFormat)
+          ).as("value")
+        )
+        .coalesce(4)
+        .write
+        .mode("overwrite")
+        .text(s"$dir/csv")
+      dir
+    }
 
   /** Staged events as protobuf wire messages (binary `value` column in
-    * parquet — the file stand-in for Kafka message values), cached per
-    * dir like the other stagings. Encoding is the [[graft.sources.ProtoWire]]
-    * positional mapping over [[eventSchema]], run distributed per
-    * partition.
+    * parquet — the file stand-in for Kafka message values). Encoding is
+    * the [[graft.sources.ProtoWire]] positional mapping over
+    * [[eventSchema]], run distributed per partition.
     */
   private def stageProto(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#proto",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_proto_")
-        val schema = eventSchema
-        Tables
-          .events(s, d)
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-          .map(row => graft.sources.ProtoWire.encode(row, schema))(
-            org.apache.spark.sql.Encoders.BINARY
-          )
-          .toDF("value")
-          .coalesce(4)
-          .write
-          .mode("overwrite")
-          .parquet(s"$dir/proto")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_stream_proto_", d) { dir =>
+      val schema = eventSchema
+      Tables
+        .events(s, d)
+        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+        .map(row => graft.sources.ProtoWire.encode(row, schema))(
+          org.apache.spark.sql.Encoders.BINARY
+        )
+        .toDF("value")
+        .coalesce(4)
+        .write
+        .mode("overwrite")
+        .parquet(s"$dir/proto")
+      dir
+    }
 
   /** The Avro writer schema shared by the s34 staging (encode) and
     * ingest (decode) sides — the khose wire shape: one binary-encoded
@@ -1889,58 +1810,53 @@ object StreamingBatch {
       |{"name":"props","type":"string"}]}""".stripMargin
 
   /** Staged events as binary Avro records (binary `value` column in
-    * parquet — the file stand-in for Kafka message values), cached per
-    * dir like the CSV/proto stages. Encoding runs distributed: one
-    * avro-core `GenericDatumWriter` + reusable `BinaryEncoder` per
-    * partition, one record per message (the khose wire shape — NOT an
-    * Avro container file).
+    * parquet — the file stand-in for Kafka message values). Encoding runs
+    * distributed: one avro-core `GenericDatumWriter` + reusable
+    * `BinaryEncoder` per partition, one record per message (the khose
+    * wire shape — NOT an Avro container file).
     */
   private def stageAvro(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#avro",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_avro_")
-        val schemaJson = avroEventSchemaJson
-        Tables
-          .events(s, d)
-          .select(
-            col("event_id"),
-            unix_micros(col("ts")).as("ts_us"),
-            col("user_id"),
-            col("event_type"),
-            col("value"),
-            col("props")
-          )
-          .as(org.apache.spark.sql.Encoders.product[(Long, Long, Long, String, Double, String)])
-          .mapPartitions { it =>
-            val avroSchema = new org.apache.avro.Schema.Parser().parse(schemaJson)
-            val writer =
-              new org.apache.avro.generic.GenericDatumWriter[org.apache.avro.generic.GenericRecord](avroSchema)
-            val bos = new java.io.ByteArrayOutputStream()
-            var enc: org.apache.avro.io.BinaryEncoder = null
-            it.map { case (id, tsUs, uid, typ, v, props) =>
-              bos.reset()
-              enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(bos, enc)
-              val rec = new org.apache.avro.generic.GenericData.Record(avroSchema)
-              rec.put("event_id", id)
-              rec.put("ts", tsUs)
-              rec.put("user_id", uid)
-              rec.put("event_type", typ)
-              rec.put("value", v)
-              rec.put("props", props)
-              writer.write(rec, enc)
-              enc.flush()
-              bos.toByteArray
-            }
-          }(org.apache.spark.sql.Encoders.BINARY)
-          .toDF("value")
-          .coalesce(4)
-          .write
-          .mode("overwrite")
-          .parquet(s"$dir/avro")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_stream_avro_", d) { dir =>
+      val schemaJson = avroEventSchemaJson
+      Tables
+        .events(s, d)
+        .select(
+          col("event_id"),
+          unix_micros(col("ts")).as("ts_us"),
+          col("user_id"),
+          col("event_type"),
+          col("value"),
+          col("props")
+        )
+        .as(org.apache.spark.sql.Encoders.product[(Long, Long, Long, String, Double, String)])
+        .mapPartitions { it =>
+          val avroSchema = new org.apache.avro.Schema.Parser().parse(schemaJson)
+          val writer =
+            new org.apache.avro.generic.GenericDatumWriter[org.apache.avro.generic.GenericRecord](avroSchema)
+          val bos = new java.io.ByteArrayOutputStream()
+          var enc: org.apache.avro.io.BinaryEncoder = null
+          it.map { case (id, tsUs, uid, typ, v, props) =>
+            bos.reset()
+            enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(bos, enc)
+            val rec = new org.apache.avro.generic.GenericData.Record(avroSchema)
+            rec.put("event_id", id)
+            rec.put("ts", tsUs)
+            rec.put("user_id", uid)
+            rec.put("event_type", typ)
+            rec.put("value", v)
+            rec.put("props", props)
+            writer.write(rec, enc)
+            enc.flush()
+            bos.toByteArray
+          }
+        }(org.apache.spark.sql.Encoders.BINARY)
+        .toDF("value")
+        .coalesce(4)
+        .write
+        .mode("overwrite")
+        .parquet(s"$dir/avro")
+      dir
+    }
 
   /** s34: the s1 firehose with the AVRO wire format — binary record
     * values through the same parse → keyed-repartition → partitioned
@@ -2304,20 +2220,16 @@ object StreamingBatch {
     * stream fold AND the rewrite algebra are both on the hash hook.
     */
   private def stageEmbeddingsJson(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#emb",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_emb_")
-        Tables
-          .embeddings(s, d)
-          .select(to_json(struct(col("vec_id"), col("embedding"))).as("value"))
-          .coalesce(4)
-          .write
-          .mode("overwrite")
-          .text(s"$dir/json")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_stream_emb_", d) { dir =>
+      Tables
+        .embeddings(s, d)
+        .select(to_json(struct(col("vec_id"), col("embedding"))).as("value"))
+        .coalesce(4)
+        .write
+        .mode("overwrite")
+        .text(s"$dir/json")
+      dir
+    }
 
   /** s20: STREAMING semantic dedup — d17's SemDeDup run online, the way
     * an ingest pipeline actually meets new vectors: the cluster model
@@ -2451,62 +2363,58 @@ object StreamingBatch {
     * through the append sink).
     */
   private def stageArrivalOrdered(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#late",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_late_")
-        val ev = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
-        val d0 = ev.agg(to_date(min("ts")).as("d0"))
-        val shift = when(pmod(col("user_id"), lit(7)) === 0, 2)
-          .when(pmod(col("user_id"), lit(7)) === 1, 1)
-          .otherwise(0)
-        val arr = ev
-          .crossJoin(broadcast(d0))
-          .withColumn("arr", (datediff(to_date(col("ts")), col("d0")) / 3).cast("int") + shift)
-          .drop("d0")
-        val sentinel = ev
-          .agg(max(col("ts")).as("ts0"))
-          .select(
-            lit(-1L).as("event_id"),
-            (col("ts0") + expr("interval 48 hours")).as("ts"),
-            lit(-1L).as("user_id"),
-            lit("__sentinel__").as("event_type"),
-            lit(0.0).as("value"),
-            lit("{}").as("props"),
-            lit(999).as("arr")
-          )
-        arr
-          .unionByName(sentinel)
-          .select(
-            to_json(
-              struct(eventSchema.fieldNames.map(col).toIndexedSeq: _*),
-              Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-            ).as("value"),
-            col("arr")
-          )
-          .repartition(1)
-          .write
-          .partitionBy("arr")
-          .mode("overwrite")
-          .text(s"$dir/stage")
-        // driver-side renumber: O(arrival batches) directory moves, not O(rows)
-        val stageDir = new java.io.File(s"$dir/stage")
-        val jsonDir = new java.io.File(s"$dir/json"); jsonDir.mkdirs()
-        val base = System.currentTimeMillis() - 1000000L
-        stageDir
-          .listFiles()
-          .filter(f => f.isDirectory && f.getName.startsWith("arr="))
-          .sortBy(_.getName.stripPrefix("arr=").toInt)
-          .zipWithIndex
-          .foreach { case (sub, i) =>
-            val part = sub.listFiles().filter(_.getName.startsWith("part-")).head
-            val dst = new java.io.File(jsonDir, f"batch_$i%04d.json")
-            java.nio.file.Files.move(part.toPath, dst.toPath)
-            dst.setLastModified(base + i * 60000L)
-          }
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_stream_late_", d) { dir =>
+      val ev = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
+      val d0 = ev.agg(to_date(min("ts")).as("d0"))
+      val shift = when(pmod(col("user_id"), lit(7)) === 0, 2)
+        .when(pmod(col("user_id"), lit(7)) === 1, 1)
+        .otherwise(0)
+      val arr = ev
+        .crossJoin(broadcast(d0))
+        .withColumn("arr", (datediff(to_date(col("ts")), col("d0")) / 3).cast("int") + shift)
+        .drop("d0")
+      val sentinel = ev
+        .agg(max(col("ts")).as("ts0"))
+        .select(
+          lit(-1L).as("event_id"),
+          (col("ts0") + expr("interval 48 hours")).as("ts"),
+          lit(-1L).as("user_id"),
+          lit("__sentinel__").as("event_type"),
+          lit(0.0).as("value"),
+          lit("{}").as("props"),
+          lit(999).as("arr")
+        )
+      arr
+        .unionByName(sentinel)
+        .select(
+          to_json(
+            struct(eventSchema.fieldNames.map(col).toIndexedSeq: _*),
+            Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
+          ).as("value"),
+          col("arr")
+        )
+        .repartition(1)
+        .write
+        .partitionBy("arr")
+        .mode("overwrite")
+        .text(s"$dir/stage")
+      // driver-side renumber: O(arrival batches) directory moves, not O(rows)
+      val stageDir = new java.io.File(s"$dir/stage")
+      val jsonDir = new java.io.File(s"$dir/json"); jsonDir.mkdirs()
+      val base = System.currentTimeMillis() - 1000000L
+      stageDir
+        .listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("arr="))
+        .sortBy(_.getName.stripPrefix("arr=").toInt)
+        .zipWithIndex
+        .foreach { case (sub, i) =>
+          val part = sub.listFiles().filter(_.getName.startsWith("part-")).head
+          val dst = new java.io.File(jsonDir, f"batch_$i%04d.json")
+          java.nio.file.Files.move(part.toPath, dst.toPath)
+          dst.setLastModified(base + i * 60000L)
+        }
+      dir
+    }
 
   /** s21: WATERMARK LATE-DATA AUDIT — the windowed aggregate under a
     * 2-hour watermark against a deterministic out-of-order arrival
@@ -2577,7 +2485,12 @@ object StreamingBatch {
     * old×old is never rescanned — each upsert reads and rewrites only
     * the fingerprint buckets its batch touches.
     */
-  def s22StreamCurate(s: SparkSession, d: String, minTokens: Int = 10, minDistinctRatio: Double = 0.3): DataFrame =
+  def s22StreamCurate(s: SparkSession, d: String): DataFrame = s22ReadIndex(s, s22CurateIndex(s, d))
+
+  /** s22's fold: lands the dedup index in a fresh bucketed store and
+    * returns the store's path (c37's compaction target).
+    */
+  private[graft] def s22CurateIndex(s: SparkSession, d: String): String =
     // opt-in compaction every 16 batches (round 17): the r16 default
     // flip to 0 (GC broke time travel for PINNED readers) let this
     // fold's manifest/version chain grow with batch count — measured
@@ -2585,8 +2498,7 @@ object StreamingBatch {
     // the LATEST id, replays at most the newest batch), so the GC
     // horizon can never strand it; s40 proves the same fold at the
     // harshest cadence (=1) mid-stream.
-    s22CurateFold(s, d, minTokens, minDistinctRatio,
-      compactEvery = 16, runPrefix = "graft_s22_run_")
+    s22CurateFold(s, d, compactEvery = 16, runPrefix = "graft_s22_run_")
 
   /** s40 (round 15): s22's dedup-index fold under a FORCED every-batch
     * compaction cadence — each micro-batch upsert immediately
@@ -2597,16 +2509,17 @@ object StreamingBatch {
     * index is the same arrival-order-insensitive (fp -> min id, count).
     */
   def s40StreamDedupCompact(s: SparkSession, d: String): DataFrame =
-    s22CurateFold(s, d, 10, 0.3, compactEvery = 1, runPrefix = "graft_s40_run_")
+    s22ReadIndex(s, s22CurateFold(s, d, compactEvery = 1, runPrefix = "graft_s40_run_"))
 
-  private def s22CurateFold(
-      s: SparkSession,
-      d: String,
-      minTokens: Int,
-      minDistinctRatio: Double,
-      compactEvery: Int,
-      runPrefix: String
-  ): DataFrame = {
+  private def s22ReadIndex(s: SparkSession, store: String): DataFrame =
+    graft.sources.BucketedStateStore
+      .readLatest(s, store)
+      .get
+      .select(col("doc_id"), col("fp"), col("n_copies"))
+      .orderBy("doc_id")
+
+  private def s22CurateFold(s: SparkSession, d: String, compactEvery: Int, runPrefix: String): String = {
+    val (minTokens, minDistinctRatio) = (10, 0.3)
     val dir = stageDocsJsonDuplicated(s, d)
     val docSchema = StructType(
       Seq(StructField("doc_id", LongType), StructField("text", StringType))
@@ -2651,64 +2564,50 @@ object StreamingBatch {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s22LastStore.put(d, store)
-    graft.sources.BucketedStateStore
-      .readLatest(s, store)
-      .get
-      .select(col("doc_id"), col("fp"), col("n_copies"))
-      .orderBy("doc_id")
+    store
   }
-
-  /** Bucketed-store root of the last [[s22StreamCurate]] run per source
-    * dir (c37's compaction target).
-    */
-  private[graft] val s22LastStore = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** s24's staging: (doc_id, raw_url) JSON lines in ascending-id file
     * ranges, so `maxFilesPerTrigger=1` replays the crawl frontier in
     * arrival order.
     */
   private def stageUrlJson(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#urls",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_url_")
-        val docs = Tables
-          .documents(s, d)
-          .select(
-            col("doc_id"),
-            graft.operators.Dedup.rawUrlFixture(col("doc_id"), col("source")).as("raw_url")
-          )
-        val mx = docs.agg((max("doc_id") + 1).as("mxp1"))
-        docs
-          .crossJoin(broadcast(mx))
-          .withColumn("arr", floor(col("doc_id") * 4 / col("mxp1")).cast("int"))
-          .select(to_json(struct(col("doc_id"), col("raw_url"))).as("value"), col("arr"))
-          .repartition(1)
-          .write
-          .partitionBy("arr")
-          .mode("overwrite")
-          .text(s"$dir/stage")
-        // arrival order must BE the id order: one file per id-quartile,
-        // renamed + mtime-stamped ascending (s21's staging discipline —
-        // same-mtime part files give FileStreamSource no defined order)
-        val stageDir = new java.io.File(s"$dir/stage")
-        val jsonDir = new java.io.File(s"$dir/json"); jsonDir.mkdirs()
-        val base = System.currentTimeMillis() - 1000000L
-        stageDir
-          .listFiles()
-          .filter(f => f.isDirectory && f.getName.startsWith("arr="))
-          .sortBy(_.getName.stripPrefix("arr=").toInt)
-          .zipWithIndex
-          .foreach { case (sub, i) =>
-            val part = sub.listFiles().filter(_.getName.startsWith("part-")).head
-            val dst = new java.io.File(jsonDir, f"batch_$i%04d.json")
-            java.nio.file.Files.move(part.toPath, dst.toPath)
-            dst.setLastModified(base + i * 60000L)
-          }
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_stream_url_", d) { dir =>
+      val docs = Tables
+        .documents(s, d)
+        .select(
+          col("doc_id"),
+          graft.operators.Dedup.rawUrlFixture(col("doc_id"), col("source")).as("raw_url")
+        )
+      val mx = docs.agg((max("doc_id") + 1).as("mxp1"))
+      docs
+        .crossJoin(broadcast(mx))
+        .withColumn("arr", floor(col("doc_id") * 4 / col("mxp1")).cast("int"))
+        .select(to_json(struct(col("doc_id"), col("raw_url"))).as("value"), col("arr"))
+        .repartition(1)
+        .write
+        .partitionBy("arr")
+        .mode("overwrite")
+        .text(s"$dir/stage")
+      // arrival order must BE the id order: one file per id-quartile,
+      // renamed + mtime-stamped ascending (s21's staging discipline —
+      // same-mtime part files give FileStreamSource no defined order)
+      val stageDir = new java.io.File(s"$dir/stage")
+      val jsonDir = new java.io.File(s"$dir/json"); jsonDir.mkdirs()
+      val base = System.currentTimeMillis() - 1000000L
+      stageDir
+        .listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("arr="))
+        .sortBy(_.getName.stripPrefix("arr=").toInt)
+        .zipWithIndex
+        .foreach { case (sub, i) =>
+          val part = sub.listFiles().filter(_.getName.startsWith("part-")).head
+          val dst = new java.io.File(jsonDir, f"batch_$i%04d.json")
+          java.nio.file.Files.move(part.toPath, dst.toPath)
+          dst.setLastModified(base + i * 60000L)
+        }
+      dir
+    }
 
   /** s24: STREAMING BLOOM-GATED DEDUP — d21's frontier check run online.
     * URLs arrive raw and are canonicalized PER MICRO-BATCH; the
@@ -2825,23 +2724,18 @@ object StreamingBatch {
     * in — every event_id ≡ 0 (mod 7) record carries an extra
     * `v2_score` field the consumer's schema does not know about (the
     * real-world "someone shipped a new producer version" incident).
-    * Cached per (JVM, dir) like the other stagings.
     */
   private def stageDriftJson(s: SparkSession, d: String): String =
-    staged.computeIfAbsent(
-      d + "#drift",
-      _ => {
-        val dir = graft.TempDirs.create("graft_stream_drift_")
-        val ev = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
-        val ok = toJsonMicros(ev.filter(col("event_id") % 7 =!= 0))
-        val drifted = toJsonMicros(
-          ev.filter(col("event_id") % 7 === 0)
-            .withColumn("v2_score", col("value") * 2 + 1)
-        )
-        ok.unionAll(drifted).coalesce(4).write.mode("overwrite").text(s"$dir/json")
-        dir
-      }
-    )
+    graft.TempDirs.fixture("graft_stream_drift_", d) { dir =>
+      val ev = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value", "props")
+      val ok = toJsonMicros(ev.filter(col("event_id") % 7 =!= 0))
+      val drifted = toJsonMicros(
+        ev.filter(col("event_id") % 7 === 0)
+          .withColumn("v2_score", col("value") * 2 + 1)
+      )
+      ok.unionAll(drifted).coalesce(4).write.mode("overwrite").text(s"$dir/json")
+      dir
+    }
 
   /** s29: STREAMING SCHEMA-DRIFT ROUTER — the khose permissive-ingest
     * contract one level above the DLQ: records that PARSE but carry
@@ -3204,23 +3098,7 @@ object StreamingBatch {
     * hashes), the s13 online-index precedent.
     */
   def s38StreamAttrition(s: SparkSession, d: String): DataFrame = {
-    val dir = stageDocsJson(s, d)
-    val docSchema = StructType(
-      Seq(StructField("doc_id", LongType), StructField("text", StringType))
-    )
-    val stream = s.readStream
-      .option("maxFilesPerTrigger", 1)
-      .text(s"$dir/json")
-      .select(from_json(col("value"), docSchema).as("r"))
-      .select("r.*")
-    val root = graft.TempDirs.create("graft_s38_run_")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) => s38Fold(root, batchId, batch); () }
-      .option("checkpointLocation", s"$root/ck")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s38LastRoot.put(d, root)
+    val root = s38AttritionFold(s, d)
     val id = latestCommittedId(root).get
     val keep = graft.sources.BucketedStateStore
       .readAt(s, s"$root/keep", id)
@@ -3251,6 +3129,30 @@ object StreamingBatch {
         round(col("n_docs").cast("double") / col("d0"), 4).as("doc_share_of_raw")
       )
       .orderBy("stage_id")
+  }
+
+  /** s38's stream: folds the staged documents through [[s38Fold]] into a
+    * fresh root and returns it ([[graft.StateAudit]] reads its per-batch
+    * write ledger).
+    */
+  private[graft] def s38AttritionFold(s: SparkSession, d: String): String = {
+    val dir = stageDocsJson(s, d)
+    val docSchema = StructType(
+      Seq(StructField("doc_id", LongType), StructField("text", StringType))
+    )
+    val stream = s.readStream
+      .option("maxFilesPerTrigger", 1)
+      .text(s"$dir/json")
+      .select(from_json(col("value"), docSchema).as("r"))
+      .select("r.*")
+    val root = graft.TempDirs.create("graft_s38_run_")
+    val q = stream.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) => s38Fold(root, batchId, batch); () }
+      .option("checkpointLocation", s"$root/ck")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    root
   }
 
   /** s37: STREAM-MAINTAINED DECAYED HEAVY HITTERS — the "who matters

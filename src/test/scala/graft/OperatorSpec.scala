@@ -8,6 +8,39 @@ import graft.operators._
 object TestSession {
   lazy val spark: SparkSession = GraftSession.local(4)
   val sf = "/root/testdata/sf0.001"
+
+  /** `run`'s result with the end-of-run state rows
+    * (`stateOperators.numRowsTotal`, summed) of the one streaming query it
+    * starts, from that query's last progress event; -1 if it reported no
+    * progress. Listener events arrive asynchronously, so this waits for
+    * the query's termination event first.
+    */
+  def withEndStateRows[T](run: => T): (T, Long) = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]()
+    val terminated = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val rows = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Long]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = started.add(e.runId)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        rows.put(e.progress.runId, e.progress.stateOperators.map(_.numRowsTotal).sum)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        terminated.add(e.runId)
+    }
+    spark.streams.addListener(listener)
+    val result =
+      try {
+        val r = run
+        eventually(timeout(Span(60, Seconds))) {
+          assert(!started.isEmpty && started.stream().allMatch(terminated.contains(_)))
+        }
+        r
+      } finally spark.streams.removeListener(listener)
+    assert(started.size == 1, s"expected one streaming query, saw ${started.size}")
+    (result, rows.getOrDefault(started.peek(), -1L))
+  }
 }
 
 /** Structural invariants per operator. Value-level correctness is the
@@ -291,6 +324,66 @@ class DedupSpec extends AnyFunSuite {
     val d1 = Dedup.d1DedupExact(spark, sf)
     assert(d1.agg(org.apache.spark.sql.functions.sum("n")).head.getLong(0) ==
       graft.sources.Tables.documents(spark, sf).count())
+  }
+}
+
+/** Fixtures (staged stream inputs, prebuilt stores) follow the tables
+  * they are built from: an overwritten table rebuilds them, unchanged
+  * tables serve the same fixture dir again.
+  */
+class FixtureSpec extends AnyFunSuite {
+  import TestSession._
+  import org.apache.spark.sql.functions.{col, sum}
+
+  /** A private copy of the sf tables, so a test may overwrite them. */
+  private def copySf(prefix: String): String = {
+    val dir = TempDirs.create(prefix)
+    new java.io.File(sf).listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
+      java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(dir, f.getName))
+    }
+    dir
+  }
+
+  /** Overwrite `dir`'s events with the sf events of even user ids. */
+  private def overwriteEvents(dir: String): Unit =
+    graft.sources.Tables.events(spark, sf).filter(col("user_id") % 2 === 0)
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+
+  test("c2b re-run after its events table is overwritten answers from the new table") {
+    def rows(d: String) = Maintenance.c2bTimeTravel(spark, d).collect().map(_.toString).toSeq
+    val dir = copySf("graft_c2b_rewrite_")
+    val first = rows(dir)
+    overwriteEvents(dir)
+    val fresh = copySf("graft_c2b_fresh_")
+    overwriteEvents(fresh)
+    val second = rows(dir)
+    assert(second != first, "the filtered events table must change c2b's answer")
+    assert(second == rows(fresh))
+  }
+
+  test("s1 re-run after its events table is overwritten lands exactly the new rows") {
+    def landed(d: String) =
+      StreamingBatch.s1IngestParquet(spark, d).agg(sum("n")).head().getLong(0)
+    val dir = copySf("graft_s1_rewrite_")
+    assert(landed(dir) == graft.sources.Tables.events(spark, sf).count())
+    overwriteEvents(dir)
+    assert(landed(dir) == graft.sources.Tables.events(spark, dir).count())
+  }
+
+  test("unchanged tables serve the same fixture dir, built once; a nested fixture build is allowed") {
+    val dir = copySf("graft_fixture_reuse_")
+    var outer, inner = 0
+    def innerFixture() = TempDirs.fixture("graft_probe_inner_", dir) { p => inner += 1; p }
+    def outerFixture() = TempDirs.fixture("graft_probe_outer_", dir) { _ =>
+      outer += 1
+      innerFixture() + "/outer"
+    }
+    val a = outerFixture()
+    assert(a == outerFixture() && a == innerFixture() + "/outer")
+    assert((outer, inner) == ((1, 1)))
+    assert(Maintenance.mergeStore(spark, dir) == Maintenance.mergeStore(spark, dir))
+    overwriteEvents(dir)
+    assert(outerFixture() != a && (outer, inner) == ((2, 2)))
   }
 }
 

@@ -329,10 +329,9 @@ class Round18Spec extends AnyFunSuite {
 
   test("s42 state is bounded: after the sentinel flush, state = one carry row per user (buffers drained)") {
     val sf = TestSession.sf
-    graft.operators.StreamingBatch.s42StreamLocfOoo(spark, sf).collect()
+    val (_, stateRows) = withEndStateRows(graft.operators.StreamingBatch.s42StreamLocfOoo(spark, sf).collect())
     val users = graft.sources.Tables.events(spark, sf).select("user_id").distinct().count()
-    val stateRows = graft.operators.StreamingBatch.lastStateRows.get("s42")
-    assert(stateRows != null, "harness records state rows")
+    assert(stateRows >= 0, "harness records state rows")
     assert(stateRows == users,
       s"state must be exactly one row per user (carry, empty buffer): $stateRows vs $users users")
   }
@@ -387,15 +386,15 @@ class Round18Spec extends AnyFunSuite {
 
   test("s45 streaming rolling p95 == e57 batch window, row for row; state = rings per type") {
     val sf = TestSession.sf
-    val stream = graft.operators.StreamingBatch.s45StreamRollingQuantile(spark, sf).collect()
+    val (stream, stateRows) =
+      withEndStateRows(graft.operators.StreamingBatch.s45StreamRollingQuantile(spark, sf).collect())
     val batch = graft.operators.Events.e57RollingP95(spark, sf).collect()
     assert(stream.length == batch.length && stream.nonEmpty)
     stream.zip(batch).foreach { case (s1, b1) =>
       (0 until 5).foreach(i => assert(Option(s1.get(i)) == Option(b1.get(i)), s"col $i at ${s1.get(0)}"))
     }
     val types = graft.sources.Tables.events(spark, sf).select("event_type").distinct().count()
-    val stateRows = graft.operators.StreamingBatch.lastStateRows.get("s45")
-    assert(stateRows != null && stateRows == types,
+    assert(stateRows == types,
       s"state = one ring per event type: $stateRows vs $types")
   }
 

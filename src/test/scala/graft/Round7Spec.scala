@@ -364,10 +364,12 @@ class Round7Spec extends AnyFunSuite {
   test("s4/s7/s11 end-of-run state is sentinel-sized, not user-sized") {
     import graft.operators.StreamingBatch
     val users = Tables.events(spark, sf).select("user_id").distinct().count()
-    StreamingBatch.s4StreamSession(spark, sf).count()
-    StreamingBatch.s7StreamSessionWindow(spark, sf).count()
-    StreamingBatch.s11StreamDistinct(spark, sf).count()
-    def state(n: String): Long = StreamingBatch.lastStateRows.getOrDefault(n, -1L)
+    val rows = Map(
+      "s4" -> withEndStateRows(StreamingBatch.s4StreamSession(spark, sf).count())._2,
+      "s7" -> withEndStateRows(StreamingBatch.s7StreamSessionWindow(spark, sf).count())._2,
+      "s11" -> withEndStateRows(StreamingBatch.s11StreamDistinct(spark, sf).count())._2
+    )
+    def state(n: String): Long = rows(n)
     println(s"[state-rows] s4=${state("s4")} s7=${state("s7")} s11=${state("s11")} users=$users")
     for (n <- Seq("s4", "s7", "s11")) {
       assert(state(n) >= 0, s"$n recorded no progress")
@@ -455,7 +457,7 @@ class Round7Spec extends AnyFunSuite {
     val cdc = graft.operators.Maintenance.c18Changelog(spark, sf).collect()
     assert(cdc.nonEmpty)
     assert(cdc.forall(r => r.getString(1) != "delete"), "upsert-only store emitted a delete")
-    val store = graft.operators.Maintenance.mergeStoreFor(spark, sf)
+    val store = graft.operators.Maintenance.mergeStore(spark, sf)
     def keyed(v: Long): Map[Long, Long] = spark.read
       .parquet(SnapshotStore.versionPath(store, v))
       .select("user_id", "event_id").collect()

@@ -363,7 +363,8 @@ class TsEncodingMatrixSpec extends AnyFunSuite {
 
   test("s23 CDC: reversed arrival really is reversed; tombstones live in the store, not the snapshot") {
     import graft.operators.StreamingBatch
-    val snap = StreamingBatch.s23StreamCdc(spark, sf).collect()
+    val fold = StreamingBatch.s23CdcFold(spark, sf)
+    val snap = StreamingBatch.s23Snapshot(spark, fold).collect()
     // no user whose latest event is an error survives in the snapshot
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(desc("ts"), desc("event_id"))
@@ -375,7 +376,7 @@ class TsEncodingMatrixSpec extends AnyFunSuite {
     assert(snap.map(_.getAs[Long]("user_id")).toSet.intersect(deletedUsers).isEmpty)
     // the store RETAINS the tombstones the snapshot dropped
     val store = graft.sources.BucketedStateStore
-      .readLatest(spark, StreamingBatch.s23LastStore.get(sf)).get
+      .readLatest(spark, fold).get
     val storeD = store.filter(col("op") === "D").select("user_id")
       .collect().map(_.getLong(0)).toSet
     assert(storeD == deletedUsers, "every deleted key is tombstoned in the store")
@@ -570,7 +571,7 @@ class TsEncodingMatrixSpec extends AnyFunSuite {
   test("c25 shallow clone: zero-copy before divergence, independent after, source untouched") {
     import graft.operators.Maintenance
     import graft.sources.SnapshotStore
-    val src = Maintenance.mergeStoreFor(spark, sf)
+    val src = Maintenance.mergeStore(spark, sf)
     val srcFilesBefore = SnapshotStore.readCurrent(spark, src).inputFiles.sorted.toSeq
     val clone = s"${TempDirs.create("graft_c25_test_")}/clone"
     SnapshotStore.shallowClone(src, clone)
