@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate.
 
-Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 scripts/check_oracle.py [--skip-missing] [--only a,b] <sfDir> <verifyOutDir>
 
 Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify), runs
 the matching oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB over
@@ -9,7 +9,7 @@ the raw tables in <sfDir>, and compares: schema (column names sorted),
 row count, and cell values (sorted columns, exact equality; floats via
 repr after float() coercion).
 """
-import sys, os, json, glob
+import argparse, sys, os, json, glob
 import duckdb
 
 def canon(rows, cols):
@@ -28,7 +28,15 @@ def canon(rows, cols):
     return out
 
 def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    ap = argparse.ArgumentParser(description="Compare graft.Verify outputs with their DuckDB oracles.")
+    ap.add_argument("sf_dir", help="dir of the raw <table>.parquet inputs")
+    ap.add_argument("out_dir", help="graft.Verify output dir (one parquet dir per query + oracle_sql.json)")
+    ap.add_argument("--skip-missing", action="store_true",
+                    help="a subset Verify run: skip queries with no output dir instead of failing them")
+    ap.add_argument("--only", type=lambda v: set(v.split(",")), default=None,
+                    help="a,b,c: check (and sweep rows-only) just these queries")
+    a = ap.parse_args()
+    sf_dir, out_dir, skip_missing, only = a.sf_dir, a.out_dir, a.skip_missing, a.only
     con = duckdb.connect()
     for t in ["region","nation","customer","supplier","part","orders",
               "lineitem","events","documents","embeddings"]:
@@ -36,15 +44,6 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
-    # --skip-missing: a subset Verify run wrote only some query dirs —
-    # treat the absent ones as out-of-scope instead of failing them
-    skip_missing = "--skip-missing" in sys.argv
-    # --only a,b,c: restrict the compare (and the rows-only sweep) to the
-    # named queries — lets a wrapper drive per-oracle timeouts/timings
-    only = None
-    for i, a in enumerate(sys.argv):
-        if a == "--only" and i + 1 < len(sys.argv):
-            only = set(sys.argv[i + 1].split(","))
     n_pass = n_fail = 0
     for name in sorted(oracles):
         if only is not None and name not in only:

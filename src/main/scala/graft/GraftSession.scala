@@ -22,6 +22,14 @@ import org.apache.spark.sql.SparkSession
   *    arrived in. [[graft.sources.Tables.normalizeTs]] is the belt-and-
   *    braces second layer for sessions not built through here.
   *  - UTC session timezone: oracle (DuckDB) parity for date arithmetic.
+  *  - The `file:` scheme is [[graft.sources.NioLocalFileSystem]] (and
+  *    [[graft.sources.NioLocalFs]] behind `FileContext`). Without
+  *    libhadoop, stock Hadoop forks `chmod` for every file and directory
+  *    it creates and `readlink` for every checkpoint rename, which left
+  *    the ingest sink's writer tasks mostly waiting on process starts.
+  *    These answer both in-process. Hadoop caches one `file:`
+  *    FileSystem per JVM and user whatever its class, so the first
+  *    session of the JVM must be built here.
   */
 object GraftSession {
 
@@ -35,6 +43,8 @@ object GraftSession {
     // dims (region/nation/supplier/part at any SF; customer at small SF)
     // stay broadcastable; explicit broadcast() hints are used regardless.
     .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
+    .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
 
   /** Local session for tests / ad-hoc mains, with the graft extension
     * stack installed by [[graft.plans.GraftExtensions.register]].
