@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -80,6 +82,10 @@ object Bench {
     // s8 at 15.6 s vs 3.4 s focused — SCALING.md's round-9 mode). The
     // repeat plus the between-queries hygiene below is the fix.
     val streamCohort = selected.keySet.filter(_.startsWith("s"))
+    // generated classes compiled (Spark's codegen cache misses) and their
+    // Janino compile time over the timed loop
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     // A query that throws is a FAILURE: it gets no time, stays out of
     // the totals, and is listed under "failed" in both JSON records.
     val outcomes = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -110,6 +116,9 @@ object Bench {
       }
       (name, times)
     }
+    val codegen =
+      s""""codegen_compiles":${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0},""" +
+        f""""codegen_compile_ms":${(CodeGenerator.compileTime - compileNs0) / 1e6}%.1f"""
     val results = outcomes.collect { case (n, Some(ts)) => (n, ts.min, ts.head) }
     val failed = outcomes.collect { case (n, None) => "\"" + n + "\"" }.mkString("[", ",", "]")
     def fmt(v: Double): String = f"$v%.3f"
@@ -123,7 +132,7 @@ object Bench {
     // ~2000 chars, far too small for 236 name:time pairs, so the file is
     // the mechanical-triage record.
     val fullLine =
-      s"""{"metric":"total_full","value":${fmt(total)},"unit":"sec","cold_value":${fmt(coldTotal)},"repeat":$repeat,"n_queries":${results.size},"failed":$failed,"queries":$qs,"sf":$sfNum}"""
+      s"""{"metric":"total_full","value":${fmt(total)},"unit":"sec","cold_value":${fmt(coldTotal)},"repeat":$repeat,"n_queries":${results.size},"failed":$failed,$codegen,"queries":$qs,"sf":$sfNum}"""
     println(fullLine)
     // Resolve the file against an explicit root (SPARK_GRAFT_REPO, else
     // CWD) and REPORT a failed write — a swallowed failure here left the
@@ -163,7 +172,7 @@ object Bench {
       val body = qs.map { case (n, v, _) => s"\"" + n + "\":" + fmt(v) }.mkString("{", ",", "}")
       println(s"""{"metric":"queries_part","part":${i + 1},"of":${chunks.size},"queries":$body,"sf":$sfNum}""")
     }
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cold_value":${fmt(coldTotal)},"repeat":$repeat,"n_queries":${results.size},"failed":$failed,"full":"BENCH_FULL.json","slowest":$slow,"sf":$sfNum}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cold_value":${fmt(coldTotal)},"repeat":$repeat,"n_queries":${results.size},"failed":$failed,$codegen,"full":"BENCH_FULL.json","slowest":$slow,"sf":$sfNum}""")
     spark.stop()
   }
 }

@@ -199,7 +199,7 @@ case class FloatVecDot(left: Expression, right: Expression) extends BinaryExpres
     copy(left = l, right = r)
 }
 
-/** Static kernels for the d2/d3-path expressions, shared by interpreted
+/** Static kernels for the dedup-path expressions, shared by interpreted
   * eval AND generated code: each expression's `doGenCode` emits a single
   * static call on the child's evaluated ArrayData, so the surrounding
   * operators stay inside ONE WholeStageCodegen span (no per-row
@@ -341,6 +341,23 @@ object ExprKernels {
       b += 1
     }
     out
+  }
+
+  /** Intersection size of two sorted distinct `array<long>`s: one merge walk. */
+  def sortedIntersectSize(x: ArrayData, y: ArrayData): Int = {
+    val nx = x.numElements()
+    val ny = y.numElements()
+    var i = 0
+    var j = 0
+    var c = 0
+    while (i < nx && j < ny) {
+      val xv = x.getLong(i)
+      val yv = y.getLong(j)
+      if (xv == yv) { c += 1; i += 1; j += 1 }
+      else if (xv < yv) i += 1
+      else j += 1
+    }
+    c
   }
 }
 
@@ -595,8 +612,11 @@ case class MisraGries(
 /** Intersection size of two SORTED distinct `array<long>` columns
   * (as produced by [[ShingleHashes]]): a single merge walk, vs.
   * array_intersect's hash-set build per pair.
+  * Codegen'd via the [[ExprKernels]] static-call pattern, so the cross
+  * joins and projections that evaluate it per pair stay inside one
+  * WholeStageCodegen span.
   */
-case class SortedLongIntersectSize(left: Expression, right: Expression) extends BinaryExpression with CodegenFallback {
+case class SortedLongIntersectSize(left: Expression, right: Expression) extends BinaryExpression {
 
   override def dataType: DataType = IntegerType
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -609,23 +629,11 @@ case class SortedLongIntersectSize(left: Expression, right: Expression) extends 
       s"SortedLongIntersectSize needs array<long> inputs, got ${left.dataType}, ${right.dataType}")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val nx = x.numElements()
-    val ny = y.numElements()
-    var i = 0
-    var j = 0
-    var c = 0
-    while (i < nx && j < ny) {
-      val xv = x.getLong(i)
-      val yv = y.getLong(j)
-      if (xv == yv) { c += 1; i += 1; j += 1 }
-      else if (xv < yv) i += 1
-      else j += 1
-    }
-    java.lang.Integer.valueOf(c)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    java.lang.Integer.valueOf(ExprKernels.sortedIntersectSize(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData]))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.ExprKernels.sortedIntersectSize($a, $b)")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)

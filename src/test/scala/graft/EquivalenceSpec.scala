@@ -69,4 +69,32 @@ class EquivalenceSpec extends AnyFunSuite {
     assert(both.nonEmpty)
     both.foreach(r => assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-12))
   }
+
+  test("SortedLongIntersectSize: generated code == interpreted eval") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val t = ArrayType(LongType, containsNull = false)
+    val e = graft.plans.SortedLongIntersectSize(BoundReference(0, t, nullable = true), BoundReference(1, t, nullable = true))
+    val generated = GenerateUnsafeProjection.generate(Seq(e))
+    val rng = new scala.util.Random(7)
+    def sortedSet(n: Int, range: Int): Array[Long] = Array.fill(n)(rng.nextInt(range).toLong - range / 2).distinct.sorted
+    val random = Seq.fill(200)((sortedSet(rng.nextInt(60), 100), sortedSet(rng.nextInt(60), 100)))
+    val cases = Seq(
+      (Array.emptyLongArray, Array.emptyLongArray),
+      (Array.emptyLongArray, Array(1L, 2L)),
+      (Array(1L, 3L, 5L), Array(2L, 4L, 6L)),
+      (Array(Long.MinValue, -1L, 0L, Long.MaxValue), Array(Long.MinValue, -1L, 0L, Long.MaxValue))
+    ) ++ random
+    cases.foreach { case (a, b) =>
+      val row = InternalRow(new GenericArrayData(a), new GenericArrayData(b))
+      val expected = a.toSet.intersect(b.toSet).size
+      assert(e.eval(row) == expected, s"${a.toSeq} ${b.toSeq}")
+      assert(generated(row).getInt(0) == expected, s"${a.toSeq} ${b.toSeq}")
+    }
+    val nullRow = InternalRow(null, new GenericArrayData(Array(1L)))
+    assert(generated(nullRow).isNullAt(0) && e.eval(nullRow) == null)
+  }
 }

@@ -315,6 +315,26 @@ class ExprCodegenSpec extends AnyFunSuite {
     assert(stages.nonEmpty, df.queryExecution.executedPlan.toString)
     assert(stages.exists(_.toString.contains("minhashfromhashes")))
   }
+
+  test("d4's cross join and pair intersect run inside WholeStageCodegen") {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    val df = graft.operators.Dedup.d4NgramJaccard(spark, sf)
+    df.collect() // runs df's own adaptive plan to its final form
+    // the operators a codegen stage fuses: its subtree down to the
+    // InputAdapters that feed it from non-codegen operators
+    def fused(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case other           => other +: other.children.flatMap(fused)
+    }
+    val stages = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec => fused(w.child)
+    }
+    val plan = df.queryExecution.executedPlan.toString
+    assert(stages.exists(_.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec])), plan)
+    assert(stages.exists(_.exists(_.expressions.exists(_.exists(_.isInstanceOf[graft.plans.SortedLongIntersectSize])))), plan)
+  }
 }
 
 /** Remaining r9 ADVICE fixes with observable behavior: the as-of exec
